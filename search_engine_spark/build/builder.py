@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import threading
 import time
 
@@ -44,6 +45,10 @@ from search_engine_spark.sources.index_store import (
     PARTIALS_SCHEMA,
     POSTINGS_SCHEMA,
 )
+
+
+class DuplicateKeyError(ValueError):
+    """The bulk-build corpus repeats a (repo, path, commit) key."""
 
 
 class IndexBuilder:
@@ -68,9 +73,8 @@ class IndexBuilder:
     # ----- phase A: docs table (doc ids + sha256 + lengths) -----
 
     def build_docs(self, corpus: DataFrame, overwrite: bool = False) -> None:
-        """Dense doc_id assignment + sha256 + tokenized lengths -> docs/."""
-        import os
-
+        """Dense doc_id assignment + sha256 + tokenized lengths -> docs/.
+        Raises ``DuplicateKeyError`` if a (repo, path, commit) key repeats."""
         self.store.write_meta()  # pin layout params for query-side readers
         if not overwrite and os.path.isdir(self.store.docs_path):
             return  # phase A is itself a checkpoint
@@ -83,9 +87,12 @@ class IndexBuilder:
         # content; the batch phase re-reads it from the corpus source).
         slim = corpus.select(
             "repo", "path", "commit", "lang",
-            F.sha2(F.col("content"), 256).alias("sha256"),
+            F.sha2(F.col(self.body_col), 256).alias("sha256"),
         )
-        with_ids = assign_doc_ids(slim, n_rows=n_in)
+        keys = Observation("docs_keys")
+        with_ids = assign_doc_ids(
+            slim, n_rows=n_in, trust_sha256=True, observation=keys
+        )
         # doc/title token lengths are NOT computed here — the batch phase
         # tokenizes exactly once and emits doclens through the posting
         # shuffle (reserved term "", build/kernels.py)
@@ -96,6 +103,16 @@ class IndexBuilder:
             .write.mode("overwrite" if overwrite else "error")
             .parquet(self.store.docs_path)
         )
+        # the batch join on (repo, path, commit) would fan a duplicated
+        # key out k x k and inflate every count downstream; the written
+        # table must not survive as a phase-A checkpoint
+        dups = keys.get["dup_keys"]
+        if dups:
+            shutil.rmtree(self.store.docs_path)
+            raise DuplicateKeyError(
+                f"corpus has {dups} row(s) whose (repo, path, commit) key "
+                f"repeats an earlier row's; keys must be unique"
+            )
         # id-assignment integrity: duplicated/dropped ids would silently
         # corrupt every downstream posting (see assign_doc_ids docstring)
         n_out = self.store.read_docs().count()
@@ -415,8 +432,6 @@ class IndexBuilder:
         landed between a batch's lineage append and its stats fold, a
         window no marker covers), so a lost fold heals on the next
         advance instead of compounding silently."""
-        import shutil
-
         if not os.path.isdir(self.store.stats_path):
             return self.finalize()
         old = self.store.read_stats()
@@ -654,7 +669,6 @@ class IndexBuilder:
         chunks containing a deleted doc go through the decode/re-encode
         kernel, every other chunk's rows are moved JVM-side untouched.
         Single writer assumed (like all builder mutations)."""
-        import shutil
         import time as _time
 
         from search_engine_spark.build.kernels import make_purge_fn
@@ -852,8 +866,6 @@ class IndexBuilder:
         recomputes from whatever is committed) and clear the marker.
         Called automatically at the start of :meth:`compact`; engines
         refuse to open while the marker exists."""
-        import shutil
-
         marker = self.store.pending_finalize_path
         if not os.path.exists(marker):
             return False
@@ -873,8 +885,6 @@ class IndexBuilder:
         pre-compaction data and crash-orphaned writes.  Run only while no
         build/ingest is in flight (an uncommitted in-progress batch looks
         identical to an orphan)."""
-        import shutil
-
         keep = set(self.store.committed_batches())
         removed = []
         for sub in ("postings", "doclens"):

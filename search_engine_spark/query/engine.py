@@ -22,9 +22,14 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+from collections import OrderedDict
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.functions.tokenizer import get_tokenizer
@@ -32,6 +37,15 @@ from search_engine_spark.plans.parser import SearchMode
 from search_engine_spark.query.kernels import RESULT_SCHEMA, make_query_kernel
 from search_engine_spark.query.plan import CompiledQuery, EMPTY, compile_query
 from search_engine_spark.sources.index_store import IndexStore, term_bucket
+
+# Above this many distinct hit ids with_doc_info stops assembling doc info
+# driver-side (an IN-list this long no longer pushes down usefully and the
+# collected metadata stops being "tiny") and runs the distributed
+# broadcast-semi-join plan instead.  64-query batches at k=100 stay under.
+_MAX_DRIVER_IDS = 8192
+_INFO_CACHE_SIZE = 1 << 16  # entries per doc-info cache
+_META_COLS = ("repo", "path", "commit", "lang")
+
 
 def _apply_per_qid_limit(
     ranked: DataFrame, n_return: dict[int, int]
@@ -114,9 +128,9 @@ class SearchEngine:
         # every query into an InMemoryTableScan of the full table (no
         # partition/bloom/column pruning) and at 10^12-file scale the table
         # cannot be materialized; the parquet scan with pushed filters IS
-        # the fast path.  doclens (O(num_docs/chunk_docs) rows) are cached.
+        # the fast path.
         self._postings = self.store.read_postings()
-        self._doclens = self.store.read_doclens().cache()
+        self._docs = self.store.read_docs()
         self._corrector = None
         # WAND skip-rate diagnostics: off by default (accumulator traffic
         # per task is tiny but nonzero); enable_wand_stats() turns it on
@@ -124,12 +138,15 @@ class SearchEngine:
         # pending tombstones (logical deletes awaiting compaction): one
         # sorted id array per touched chunk, left-joined onto the doclens
         # cogroup side so the kernel drops the ids from the chunk's doc
-        # space (ALL/NOT complement included).  O(touched chunks) rows,
-        # resolved once per engine open like the batch list; scores keep
-        # the global collection stats (post-hoc-restriction semantics)
-        # until compact() purges physically and recomputes them.
+        # space (ALL/NOT complement included); other chunks get a null
+        # cell, skipped at zero cost, and keep their WAND path.
+        # O(touched chunks) rows, resolved once per engine open like the
+        # batch list; scores keep the global collection stats
+        # (post-hoc-restriction semantics) until compact() purges
+        # physically and recomputes them.
         tomb = self.store.read_tombstones()
         self._deleted_by_chunk = None
+        doclens = self.store.read_doclens()
         if tomb is not None:
             by_chunk = (
                 tomb.select(
@@ -145,6 +162,19 @@ class SearchEngine:
             )
             if not by_chunk.isEmpty():
                 self._deleted_by_chunk = by_chunk
+                doclens = doclens.join(by_chunk, "chunk_id", "left")
+        # the kernel's doclens side (O(num_docs / chunk_docs) rows), built
+        # once per open and cached hash-partitioned by chunk_id with one
+        # partition per core: the cogroup stage then runs a task per core
+        # instead of one coalesced task running every chunk kernel in turn
+        self._doclens = doclens.repartition(
+            spark.sparkContext.defaultParallelism, "chunk_id"
+        ).cache()
+        # with_doc_info's metadata + snippet caches: sound because the
+        # snapshot is pinned above; distinct queries share hit docs
+        self._info_cache: OrderedDict = OrderedDict()
+        self._snip_cache: OrderedDict = OrderedDict()
+        self._info_lock = threading.Lock()
 
     # ----- spelling correction (reference Q23) -----
 
@@ -207,22 +237,36 @@ class SearchEngine:
         num_candidates: int | None = None,
         num_return: int | None = None,
     ) -> CompiledQuery:
-        tokens = self._tokenize(query)
-        if self.config.enable_spelling:
-            tokens = self._correct_tokens(tokens, mode)
+        return self._compile_many(
+            [(query, mode)], num_return, num_candidates, first_qid=qid
+        )[0]
+
+    def _compile_many(
+        self,
+        queries: list[tuple[str, SearchMode]],
+        num_return: int | None = None,
+        num_candidates: int | None = None,
+        first_qid: int = 0,
+    ) -> list[CompiledQuery]:
+        """Plans with qid = ``first_qid`` + position in ``queries``; one
+        term-stats lookup covers every query's tokens."""
+        tokenized = []
+        for q, mode in queries:
+            toks = self._tokenize(q)
+            if self.config.enable_spelling:
+                toks = self._correct_tokens(toks, mode)
+            tokenized.append(toks)
         # candidate terms for the stats lookup: every non-operator token
         # (operators that survive as terms just come back df=0, harmless)
-        dfs = self.store.term_stats_for(tokens)
-        return compile_query(
-            tokens,
-            mode,
-            dfs,
-            int(self.stats["num_docs"]),
-            self.config,
-            qid=qid,
-            num_candidates=num_candidates,
-            num_return=num_return,
-        )
+        dfs = self.store.term_stats_for([t for ts in tokenized for t in ts])
+        return [
+            compile_query(
+                toks, mode, dfs, int(self.stats["num_docs"]), self.config,
+                qid=first_qid + i, num_candidates=num_candidates,
+                num_return=num_return,
+            )
+            for i, ((_q, mode), toks) in enumerate(zip(queries, tokenized))
+        ]
 
     # ----- execution -----
 
@@ -280,48 +324,19 @@ class SearchEngine:
         under filters and deletions: the kernel drops non-surviving
         candidates per segment before scoring, and the unfiltered block
         maxima remain valid upper bounds (see wand.py)."""
-        live = [p for p in plans if p.tree[0] != EMPTY]
-        if not live:
+        scan = self._live_scan(plans, use_wand)
+        if scan is None:
             return self._empty_ranked()
-
-        fetch_terms = sorted({t for p in live for t in p.fetch_terms})
-        need_pos = any(p.needs_positions for p in live)
-        need_blk = use_wand and any(p.wand_eligible for p in live)
-        scan_all = any(p.scan_all_chunks for p in live)
-        if not fetch_terms and not scan_all:
-            return self._empty_ranked()
-
-        cols = list(_BASE_COLS)
-        if need_pos:
-            cols += _POS_COLS
-        if need_blk:
-            cols += _BLK_COLS
-        buckets = sorted(
-            {term_bucket(t, self.config.n_term_buckets) for t in fetch_terms}
-        )
-        postings = self._postings.where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(fetch_terms)
-        ).select(*cols)
-
+        live, postings = scan
         doclens = self._doclens
         if doc_filter is not None:
             doclens = doclens.join(
                 self._allowed_by_chunk(doc_filter), "chunk_id", "inner"
             )
-        if self._deleted_by_chunk is not None:
-            # left join: chunks without deletions keep a null cell (the
-            # kernel skips them at zero cost) and keep their WAND path
-            doclens = doclens.join(
-                self._deleted_by_chunk, "chunk_id", "left"
-            )
 
         kernel = make_query_kernel(
             live,
-            {
-                "num_docs": int(self.stats["num_docs"]),
-                "avg_doc_len": float(self.stats["avg_doc_len"]),
-                "avg_title_len": float(self.stats["avg_title_len"]),
-            },
+            self.stats,
             self.config.k1,
             self.config.b,
             self.config.title_weight,
@@ -350,6 +365,32 @@ class SearchEngine:
         ranked = per_chunk.withColumn("rank", F.row_number().over(w))
         return _apply_per_qid_limit(ranked, n_return)
 
+    def _live_scan(
+        self, plans: list[CompiledQuery], wand: bool
+    ) -> tuple[list[CompiledQuery], DataFrame] | None:
+        """The plans that can match and the postings scan they need (block
+        metadata only when ``wand``); None when no plan can match."""
+        live = [p for p in plans if p.tree[0] != EMPTY]
+        terms = sorted({t for p in live for t in p.fetch_terms})
+        if not terms and not any(p.scan_all_chunks for p in live):
+            return None
+        cols = list(_BASE_COLS)
+        if any(p.needs_positions for p in live):
+            cols += _POS_COLS
+        if wand and any(p.wand_eligible for p in live):
+            cols += _BLK_COLS
+        return live, self._scan_postings(terms, cols)
+
+    def _scan_postings(self, terms: list[str], cols: list[str]) -> DataFrame:
+        """The postings rows of ``terms``: their hash-bucket partitions
+        only, with ``term IN (...)`` pushed to the parquet scan."""
+        buckets = sorted(
+            {term_bucket(t, self.config.n_term_buckets) for t in terms}
+        )
+        return self._postings.where(
+            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+        ).select(*cols)
+
     def _allowed_by_chunk(self, doc_filter) -> DataFrame:
         """Filter survivors as one sorted id array per chunk.  The inner
         join this feeds drops chunks with no surviving doc before the
@@ -357,7 +398,7 @@ class SearchEngine:
         both join sides are O(num_docs / chunk_docs) rows, so the join
         stays small no matter how wide the filter is."""
         return (
-            self.store.read_docs()
+            self._docs
             .where(doc_filter)
             .select(
                 F.floor(
@@ -391,30 +432,14 @@ class SearchEngine:
             make_facet_kernel,
         )
 
-        live = [p for p in plans if p.tree[0] != EMPTY]
-        if not live:
+        scan = self._live_scan(plans, wand=False)
+        if scan is None:
             return self.spark.createDataFrame(
                 [], "qid int, value string, n_docs long"
             )
-        fetch_terms = sorted({t for p in live for t in p.fetch_terms})
-        need_pos = any(p.needs_positions for p in live)
-        scan_all = any(p.scan_all_chunks for p in live)
-        if not fetch_terms and not scan_all:
-            return self.spark.createDataFrame(
-                [], "qid int, value string, n_docs long"
-            )
-        cols = list(_BASE_COLS)
-        if need_pos:
-            cols += _POS_COLS
-        buckets = sorted(
-            {term_bucket(t, self.config.n_term_buckets) for t in fetch_terms}
-        )
-        postings = self._postings.where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(fetch_terms)
-        ).select(*cols)
-
+        live, postings = scan
         facets = (
-            self.store.read_docs()
+            self._docs
             .select(
                 F.floor(
                     F.col("doc_id") / self.config.chunk_docs
@@ -438,10 +463,6 @@ class SearchEngine:
         if doc_filter is not None:
             doclens = doclens.join(
                 self._allowed_by_chunk(doc_filter), "chunk_id", "inner"
-            )
-        if self._deleted_by_chunk is not None:
-            doclens = doclens.join(
-                self._deleted_by_chunk, "chunk_id", "left"
             )
         per_chunk = (
             postings.groupby("chunk_id")
@@ -485,27 +506,9 @@ class SearchEngine:
         use_wand: bool = True,
     ) -> DataFrame:
         """Many queries in one scan+job; qid = position in ``queries``."""
-        plans = []
-        # one stats lookup for all queries' tokens
-        all_tokens: list[str] = []
-        tokenized = []
-        for q, mode in queries:
-            toks = self._tokenize(q)
-            if self.config.enable_spelling:
-                # same OOV-correction funnel as search()/compile() — the two
-                # entry points must agree on the final token stream
-                toks = self._correct_tokens(toks, mode)
-            tokenized.append(toks)
-            all_tokens.extend(toks)
-        dfs = self.store.term_stats_for(all_tokens)
-        for qid, ((_q, mode), toks) in enumerate(zip(queries, tokenized)):
-            plans.append(
-                compile_query(
-                    toks, mode, dfs, int(self.stats["num_docs"]),
-                    self.config, qid=qid, num_return=num_return,
-                )
-            )
-        return self.execute(plans, use_wand=use_wand)
+        return self.execute(
+            self._compile_many(queries, num_return), use_wand=use_wand
+        )
 
     def search_batch_chunked(
         self,
@@ -584,26 +587,17 @@ class SearchEngine:
             .groupBy("chunk_id")
             .agg(F.collect_list(F.struct("qid", "doc_id")).alias("cands"))
         )
-        fetch_terms = sorted({t for p in live for t in p.fetch_terms})
-        buckets = sorted(
-            {term_bucket(t, self.config.n_term_buckets) for t in fetch_terms}
+        postings = self._scan_postings(
+            sorted({t for p in live for t in p.fetch_terms}),
+            _BASE_COLS + _POS_COLS,
         )
-        postings = self._postings.where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(fetch_terms)
-        ).select(*(_BASE_COLS + _POS_COLS))
         doclens = self._doclens.join(
             F.broadcast(cand_by_chunk), "chunk_id", "inner"
         )
         kernel = make_features_kernel(
             live,
             model.w,
-            {
-                "num_docs": int(self.stats["num_docs"]),
-                "avg_doc_len": float(self.stats["avg_doc_len"]),
-                "avg_title_len": float(self.stats["avg_title_len"]),
-                "max_doc_len": int(self.stats["max_doc_len"]),
-                "max_title_len": int(self.stats["max_title_len"]),
-            },
+            self.stats,
             self.config.k1,
             self.config.b,
             self.config.title_weight,
@@ -768,26 +762,115 @@ class SearchEngine:
         self, ranked: DataFrame, corpus: DataFrame | None = None
     ) -> DataFrame:
         """Join doc metadata (and snippets when the corpus is supplied) —
-        reference ``get_doc_info`` (inverted_index.py:1186-1219)."""
+        reference ``get_doc_info`` (inverted_index.py:1186-1219).
+
+        The ranked rows are collected once; metadata comes from one
+        ``doc_id IN (...)`` docs scan (pushed to the parquet row-group
+        filters) and snippets from one corpus scan, both memoized per
+        engine.  The result is a local DataFrame in (qid, rank) order:
+        collecting it runs no Spark job.  Hit sets beyond
+        ``_MAX_DRIVER_IDS`` distinct ids take the distributed plan."""
+        rows = sorted(ranked.collect(), key=lambda r: (r.qid, r.rank))
+        ids = sorted({r.doc_id for r in rows})
+        if len(ids) > _MAX_DRIVER_IDS:
+            return self._doc_info_join(
+                self._local_frame(ranked.schema, [r.asDict() for r in rows]),
+                corpus,
+            )
+        info = self._cached(self._info_cache, ids, self._fetch_meta)
+        # the distributed plan's column order: join keys lead
+        meta = [T.StructField(c, T.StringType()) for c in _META_COLS]
+        fields = [ranked.schema["doc_id"]] + [
+            f for f in ranked.schema if f.name != "doc_id"
+        ]
+        if corpus is None:
+            fields += meta
+        else:
+            tag = corpus.semanticHash()  # snippets are cached per corpus
+            keys = sorted({(tag, *m[:3]) for m in info.values()})
+            snip = self._cached(
+                self._snip_cache, keys,
+                lambda miss: self._fetch_snippets(corpus, tag, miss),
+            )
+            fields = meta[:3] + fields + [
+                meta[3], T.StructField("snippet", T.StringType())
+            ]
+        out = []
+        for r in rows:
+            d = r.asDict()
+            m = info.get(r.doc_id, (None,) * len(_META_COLS))
+            d.update(zip(_META_COLS, m))
+            if corpus is not None:
+                d["snippet"] = snip.get((tag, *m[:3]))
+            out.append(d)
+        return self._local_frame(T.StructType(fields), out)
+
+    def _local_frame(self, schema: T.StructType, rows: list[dict]) -> DataFrame:
+        """Driver rows as a DataFrame built from an Arrow table: it
+        collects as a LocalTableScan, without a Spark job."""
+        return self.spark.createDataFrame(
+            pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+        )
+
+    def _cached(self, cache: OrderedDict, keys: list, fetch) -> dict:
+        """``{key: value}`` for ``keys`` from a bounded engine-scoped
+        cache; the misses are fetched in one ``fetch(missing)`` call."""
+        with self._info_lock:
+            hit = {k: cache[k] for k in keys if k in cache}
+        missing = [k for k in keys if k not in hit]
+        if missing:
+            fetched = fetch(missing)
+            hit.update((k, fetched[k]) for k in missing if k in fetched)
+            with self._info_lock:
+                cache.update(fetched)
+                while len(cache) > _INFO_CACHE_SIZE:
+                    cache.popitem(last=False)
+        return hit
+
+    def _fetch_meta(self, ids: list[int]) -> dict:
+        return {
+            r.doc_id: tuple(r)[1:]
+            for r in self._docs.where(F.col("doc_id").isin(ids))
+            .select("doc_id", *_META_COLS)
+            .collect()
+        }
+
+    def _fetch_snippets(
+        self, corpus: DataFrame, tag: int, keys: list[tuple]
+    ) -> dict:
+        """Three single-column IN filters, each pushed down to the corpus
+        scan; the commit hash alone is near-unique, so over-selection
+        from the conjunction is negligible, and the exact key match
+        happens in the caller's dict lookup."""
+        _tags, repos, paths, commits = (sorted(set(c)) for c in zip(*keys))
+        return {
+            (tag, r.repo, r.path, r.commit): r.snippet
+            for r in corpus.where(
+                F.col("repo").isin(repos)
+                & F.col("path").isin(paths)
+                & F.col("commit").isin(commits)
+            )
+            .select(
+                "repo", "path", "commit",
+                F.substring("content", 1, self.config.snippet_length)
+                .alias("snippet"),
+            )
+            .collect()
+        }
+
+    def _doc_info_join(
+        self, ranked: DataFrame, corpus: DataFrame | None
+    ) -> DataFrame:
+        """Distributed doc info for hit sets too large for the driver."""
         # the docs table is corpus-row-count sized: never broadcast or
         # shuffle it.  Prune it to the hit set with a broadcast SEMI join
-        # (the only broadcast of the tiny ranked ids — the docs side is a
+        # (the only broadcast of the ranked ids — the docs side is a
         # streamed scan), then broadcast the <= |ranked| pruned metadata
-        # back onto the ranked rows.
-        #
-        # Each side that feeds more than one downstream plan is pinned
-        # with a LAZY localCheckpoint so the expensive subplans run
-        # exactly ONCE: the ranked query (otherwise re-executed by the
-        # hit-id broadcast AND the final join) and the pruned docs scan
-        # (otherwise re-scanned by the snippet-key broadcast).  Both
-        # checkpoints are top-k sized — never corpus sized.  Lazy, not
-        # eager: the first broadcast job materializes them in passing,
-        # where eager would pay extra serialized job floors up front
-        # (measured 0.94 vs 0.74 s warm-request p50 at 40k docs).
-        ranked = ranked.localCheckpoint(eager=False)
-        docs = self.store.read_docs().select(
-            "doc_id", "repo", "path", "commit", "lang"
-        )
+        # back onto the ranked rows.  With a corpus, the pruned docs side
+        # feeds two plans (the metadata join and the snippet keys), so it
+        # is pinned by a LAZY localCheckpoint: the docs scan runs once,
+        # materialized in passing by the first broadcast job.
+        docs = self._docs.select("doc_id", *_META_COLS)
         hit_ids = ranked.select("doc_id").distinct()
         docs_hit = docs.join(F.broadcast(hit_ids), "doc_id", "leftsemi")
         if corpus is not None:

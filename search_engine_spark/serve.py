@@ -36,30 +36,19 @@ position, and a request asking for a smaller k than its batch-mates
 takes the rank <= k prefix (top-k is rank-stable in k).  Rerank
 requests keep the solo path (the MLP stage is per-query).
 
-Two serving-only fast paths on top of the batcher (results stay
-bit-identical to ``SearchEngine.search`` + ``with_doc_info``):
+Doc info (and snippets, when a corpus is attached) comes from
+``SearchEngine.with_doc_info``, the call the CLI makes.
 
-* **Driver-side doc-info assembly.**  ``with_doc_info`` is built for
-  arbitrary downstream DataFrame plans, so it localCheckpoints the
-  ranked subplan and runs broadcast joins — ~2 extra job floors per
-  request wave.  The batcher already collects the ranked rows, so it
-  fetches metadata for the <= batch*k hit ids with ONE pushdown-
-  filtered docs scan (``doc_id IN (...)`` reaches the parquet
-  row-group filters) and one more for snippets when a corpus is
-  attached, then zips rows driver-side.  Hit sets beyond
-  ``_MAX_DRIVER_IDS`` fall back to the distributed ``with_doc_info``
-  join (the 100-TB guard: never ship an unbounded id list).
-* **A snapshot-scoped result cache.**  Real query logs are Zipf —
-  repeated queries dominate — and a cache hit costs zero Spark jobs.
-  Soundness: ``SearchEngine`` resolves its committed-batch list and
-  tombstones ONCE at open (query/engine.py:112-147), so the engine's
-  view of the index is immutable for its lifetime and a cache entry
-  can never be staler than the engine serving it.  New data requires a
-  new ``SearchService`` (exactly as it already requires a new engine),
-  which starts cold.  Entries store the full rank-ordered row list at
-  the k they were computed with; smaller-k requests take the prefix,
-  larger-k requests miss and recompute.  Bounded LRU
-  (``cache_size`` entries, 0 disables).
+A snapshot-scoped result cache sits on top of the batcher.  Real query
+logs are Zipf — repeated queries dominate — and a cache hit costs zero
+Spark jobs.  Soundness: ``SearchEngine`` resolves its committed-batch
+list and tombstones ONCE at open, so the engine's view of the index is
+immutable for its lifetime and a cache entry can never be staler than
+the engine serving it.  New data requires a new ``SearchService``
+(exactly as it already requires a new engine), which starts cold.
+Entries store the full rank-ordered row list at the k they were
+computed with; smaller-k requests take the prefix, larger-k requests
+miss and recompute.  Bounded LRU (``cache_size`` entries, 0 disables).
 """
 
 from __future__ import annotations
@@ -73,19 +62,11 @@ from concurrent.futures import Future
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import Row, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from search_engine_spark.config import EngineConfig
 from search_engine_spark.plans.parser import SearchMode
 from search_engine_spark.query.engine import SearchEngine
-
-# Above this many distinct hit ids the batcher stops assembling doc info
-# driver-side (an IN-list this long no longer pushes down usefully and
-# the collected metadata stops being "tiny") and uses the distributed
-# with_doc_info join instead.  64-query batches at k=100 stay well under.
-_MAX_DRIVER_IDS = 8192
-
 
 class _MicroBatcher:
     """Coalesce concurrent (query, mode, k) requests into one
@@ -109,12 +90,6 @@ class _MicroBatcher:
         self._cache_size = cache_size
         self._cache: OrderedDict[tuple, tuple[int, list]] = OrderedDict()
         self._cache_lock = threading.Lock()
-        # doc metadata + snippet caches (immutable for the engine's
-        # pinned snapshot, same argument as the result cache): distinct
-        # queries share hit docs, so later waves fetch only unseen ids
-        self._info_cache: OrderedDict = OrderedDict()
-        self._snip_cache: OrderedDict = OrderedDict()
-        self._info_lock = threading.Lock()
         # a few workers, not one: a request that arrives just after a
         # batch departs would otherwise serialize behind that batch's
         # whole job.  2-3 overlapping batch jobs keep the scheduler fed
@@ -202,13 +177,15 @@ class _MicroBatcher:
             for q, m, _k, _f in batch:
                 uniq.setdefault((q, m), len(uniq))
             ranked = eng.search_batch(list(uniq), num_return=kmax)
-            ranked_rows = ranked.collect()
-            by_key = self._attach_doc_info(ranked, ranked_rows, uniq)
-            for (q, m), rows in by_key.items():
-                self._cache_put(q, m, kmax, rows)
+            by_qid: dict[int, list] = defaultdict(list)
+            # rows come in (qid, rank) order: each list is rank-ordered
+            for r in eng.with_doc_info(ranked, self._service.corpus).collect():
+                by_qid[r.qid].append(r)
+            for (q, m), qid in uniq.items():
+                self._cache_put(q, m, kmax, by_qid[qid])
             for q, m, k, fut in batch:
                 fut.set_result(
-                    [r for r in by_key[(q, m)] if r.rank <= k]
+                    [r for r in by_qid[uniq[(q, m)]] if r.rank <= k]
                 )
         except Exception:
             # isolate the failure: re-run each request solo and let the
@@ -219,121 +196,9 @@ class _MicroBatcher:
                         eng.search(q, m, num_return=k), self._service.corpus
                     ).collect()
                     fut.set_result(rows)
-                    self._cache_put(
-                        q, m, k, sorted(rows, key=lambda r: r.rank)
-                    )
+                    self._cache_put(q, m, k, rows)
                 except Exception as exc:
                     fut.set_exception(exc)
-
-    def _attach_doc_info(
-        self, ranked, ranked_rows: list, uniq: dict
-    ) -> dict:
-        """Zip doc metadata (and snippets when a corpus is attached) onto
-        the collected ranked rows — same output rows as
-        ``with_doc_info(ranked).collect()`` but with the hit-set-sized
-        lookups done as pushdown-filtered scans instead of
-        localCheckpoint + broadcast-join plans (which pay ~2 extra job
-        floors per wave — measured 1.4 s -> 0.8 s per 16-request wave at
-        40k docs)."""
-        eng = self._service.engine
-        corpus = self._service.corpus
-        ids = sorted({r.doc_id for r in ranked_rows})
-        if len(ids) > _MAX_DRIVER_IDS:
-            # scale guard: a hit set this large stops being "tiny" —
-            # take the distributed join path instead
-            rows = eng.with_doc_info(ranked, corpus).collect()
-            by_qid: dict[int, list] = defaultdict(list)
-            for r in rows:
-                by_qid[r.qid].append(r)
-            return {
-                qm: sorted(by_qid[qid], key=lambda r: r.rank)
-                for qm, qid in uniq.items()
-            }
-        with self._info_lock:
-            info = {
-                i: self._info_cache[i] for i in ids if i in self._info_cache
-            }
-        missing = [i for i in ids if i not in info]
-        if missing:
-            docs = eng.store.read_docs().select(
-                "doc_id", "repo", "path", "commit", "lang"
-            )
-            fetched = {
-                r.doc_id: r
-                for r in docs.where(F.col("doc_id").isin(missing)).collect()
-            }
-            info.update(fetched)
-            with self._info_lock:
-                self._info_cache.update(fetched)
-                while len(self._info_cache) > (1 << 16):
-                    self._info_cache.popitem(last=False)
-        snip: dict | None = None
-        if corpus is not None:
-            keys = {(i.repo, i.path, i.commit) for i in info.values()}
-            with self._info_lock:
-                snip = {
-                    k: self._snip_cache[k]
-                    for k in keys
-                    if k in self._snip_cache
-                }
-            missing_keys = keys - snip.keys()
-            if missing_keys:
-                # three single-column IN filters (each pushes down to the
-                # corpus scan); the commit hash alone is near-unique, so
-                # over-selection from the conjunction is negligible and
-                # the exact triple match happens in the dict lookup below
-                commits = sorted({k[2] for k in missing_keys})
-                repos = sorted({k[0] for k in missing_keys})
-                paths = sorted({k[1] for k in missing_keys})
-                crows = (
-                    corpus.where(
-                        F.col("commit").isin(commits)
-                        & F.col("repo").isin(repos)
-                        & F.col("path").isin(paths)
-                    )
-                    .select(
-                        "repo",
-                        "path",
-                        "commit",
-                        F.substring(
-                            "content", 1, eng.config.snippet_length
-                        ).alias("snippet"),
-                    )
-                    .collect()
-                )
-                fetched_snips = {
-                    (r.repo, r.path, r.commit): r.snippet for r in crows
-                }
-                snip.update(fetched_snips)
-                with self._info_lock:
-                    self._snip_cache.update(fetched_snips)
-                    while len(self._snip_cache) > (1 << 16):
-                        self._snip_cache.popitem(last=False)
-        by_qid = defaultdict(list)
-        for r in ranked_rows:
-            by_qid[r.qid].append(r)
-        out: dict = {}
-        for qm, qid in uniq.items():
-            rows = []
-            for r in sorted(by_qid[qid], key=lambda rr: rr.rank):
-                i = info.get(r.doc_id)
-                d = {
-                    "doc_id": r.doc_id,
-                    "qid": r.qid,
-                    "score": r.score,
-                    "rank": r.rank,
-                    "repo": i.repo if i else None,
-                    "path": i.path if i else None,
-                    "commit": i.commit if i else None,
-                    "lang": i.lang if i else None,
-                }
-                if snip is not None:
-                    d["snippet"] = (
-                        snip.get((i.repo, i.path, i.commit)) if i else None
-                    )
-                rows.append(Row(**d))
-            out[qm] = rows
-        return out
 
 
 class SearchService:

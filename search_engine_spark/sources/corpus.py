@@ -20,7 +20,9 @@ the distributed mirror of the reference's disjoint block ranges,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 SORT_KEYS = ["repo", "path", "commit"]
@@ -105,19 +107,26 @@ def assign_doc_ids(
     corpus: DataFrame,
     n_partitions: int | None = None,
     n_rows: int | None = None,
+    trust_sha256: bool = False,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Adds dense ``doc_id`` (0..N-1 in (repo, path, commit) order) and
     ``sha256`` (per-row invariant vs the source corpus).
 
-    If the input already carries a ``sha256`` column it is trusted and
-    ``content`` is not required.  Bulk callers exploit this: hashing is a
-    per-row map, so computing ``sha256`` *before* this function and
-    projecting ``content`` away means the range shuffle (and the persist
-    below) moves ~150-byte key rows instead of whole documents — at
-    100 TB that is the difference between shuffling the corpus and
+    ``sha256`` is computed from ``content`` (replacing any input column of
+    that name) unless ``trust_sha256``: then the input's ``sha256`` is kept
+    and ``content`` is not required.  The bulk build exploits this:
+    hashing is a per-row map, so computing ``sha256`` *before* this
+    function and projecting ``content`` away means the range shuffle (and
+    the persist below) moves ~150-byte key rows instead of whole documents
+    — at 100 TB that is the difference between shuffling the corpus and
     shuffling ~1% of it (measured: the full-row form filled 56 GB of
     block-manager scratch at 163.84M docs and died; the slim form fits).
-    Per-row hashes are shuffle-invariant, so the output is bit-identical.
+
+    ``observation`` gets a ``dup_keys`` metric: rows whose (repo, path,
+    commit) key repeats the previous row's.  Equal keys share a range
+    partition, so every duplicate counts, and the metric rides the job
+    that materializes the output.
 
     The ranged DataFrame is persisted before the counts pass: range
     partitioning samples its boundaries, and two *separate* evaluations of
@@ -154,6 +163,14 @@ def assign_doc_ids(
         .join(F.broadcast(offset_df), "_pid")
         .withColumn("doc_id", F.col("_offset") + F.col("_rn"))
     )
-    if "sha256" not in corpus.columns:
+    if not trust_sha256:
         out = out.withColumn("sha256", F.sha2(F.col("content"), 256))
+    if observation is not None:
+        dup = reduce(
+            lambda a, b: a & b,
+            [F.lag(k).over(w) == F.col(k) for k in SORT_KEYS],
+        )
+        out = out.withColumn("_dup", dup).observe(
+            observation, F.count_if("_dup").alias("dup_keys")
+        ).drop("_dup")
     return out.drop("_pid", "_rn", "_offset")

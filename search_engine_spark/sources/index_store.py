@@ -87,6 +87,19 @@ DOCLENS_SCHEMA = T.StructType(
     ]
 )
 
+# The readers below declare these instead of inferring them: inference is
+# its own Spark job (a footer read) on every DataFrame a read creates.
+DOCS_SCHEMA = (
+    "doc_id long, repo string, path string, commit string, lang string, "
+    "sha256 string"
+)
+TERM_STATS_SCHEMA = "term string, df long, n_chunks long, bucket int"
+STATS_SCHEMA = (
+    "num_docs long, avg_doc_len double, avg_title_len double, "
+    "max_doc_len long, max_title_len long, sum_doc_len long, "
+    "sum_title_len long, total_postings long, ids_covered long"
+)
+
 
 # layout fields baked into a built index — queries MUST use the builder's
 # values (a bucket-count mismatch silently empties every term lookup)
@@ -174,11 +187,9 @@ class IndexStore:
         semantics)."""
         if not os.path.isdir(self.tombstones_path):
             return None
-        return (
-            self.spark.read.parquet(self.tombstones_path)
-            .select(F.col("doc_id").cast("long"))
-            .distinct()
-        )
+        return self.spark.read.schema("doc_id long").parquet(
+            self.tombstones_path
+        ).distinct()
 
     # ----- lineage-gated reads -----
     def read_lineage(self) -> DataFrame:
@@ -243,20 +254,20 @@ class IndexStore:
         paths = [self.postings_batch_path(b) for b in batches]
         # basePath keeps the bucket partition column; batch dir itself is
         # not a column (constant per path)
-        return self.spark.read.option("basePath", str(self.dir / "postings")).parquet(
-            *paths
-        ).drop("batch")
+        return self.spark.read.schema(POSTINGS_SCHEMA).option(
+            "basePath", str(self.dir / "postings")
+        ).parquet(*paths).drop("batch")
 
     def read_doclens(self, batches: list[int] | None = None) -> DataFrame:
         if batches is None:
             batches = self.committed_batches()
         paths = [self.doclens_batch_path(b) for b in batches]
-        return self.spark.read.option("basePath", str(self.dir / "doclens")).parquet(
-            *paths
-        ).drop("batch")
+        return self.spark.read.schema(DOCLENS_SCHEMA).option(
+            "basePath", str(self.dir / "doclens")
+        ).parquet(*paths).drop("batch")
 
     def read_docs(self) -> DataFrame:
-        return self.spark.read.parquet(self.docs_path)
+        return self.spark.read.schema(DOCS_SCHEMA).parquet(self.docs_path)
 
     def read_doc_lens(self, batches: list[int] | None = None) -> DataFrame:
         """Decoded per-doc token lengths -> (doc_id, doc_len, title_len).
@@ -295,29 +306,36 @@ class IndexStore:
         )
 
     def read_stats(self) -> dict:
-        row = self.spark.read.parquet(self.stats_path).head()
-        return row.asDict()
+        """The stats row; a column an older stats file lacks reads None."""
+        return self.spark.read.schema(STATS_SCHEMA).parquet(
+            self.stats_path
+        ).head().asDict()
 
     def read_term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(self.term_stats_path)
+        return self.spark.read.schema(TERM_STATS_SCHEMA).parquet(
+            self.term_stats_path
+        )
 
     def term_stats_for(self, tokens: list[str]) -> dict[str, int]:
         """df per token — partition-pruned lookup (bucket IN + term IN are
-        both pushed to the parquet scan).  Results are memoized per store
-        instance (the index is immutable once opened), so repeated query
-        terms skip the lookup job entirely."""
+        both pushed to the parquet scan).  The table and its file listing
+        are resolved once per store instance and the results memoized (the
+        index is immutable once opened), so a lookup is one Spark job and
+        repeated query terms skip it entirely."""
         if not tokens:
             return {}
-        cache = getattr(self, "_df_cache", None)
-        if cache is None:
-            cache = self._df_cache = {}
+        if getattr(self, "_df_cache", None) is None:
+            # in this order: a thread that sees the memo sees the table
+            self._term_stats = self.read_term_stats()
+            self._df_cache = {}
+        cache = self._df_cache
         missing = sorted({t for t in tokens if t not in cache})
         if missing:
             buckets = sorted(
                 {term_bucket(t, self.config.n_term_buckets) for t in missing}
             )
             rows = (
-                self.read_term_stats()
+                self._term_stats
                 .where(
                     F.col("bucket").isin(buckets) & F.col("term").isin(missing)
                 )

@@ -372,10 +372,63 @@ def test_assign_doc_ids_trusts_precomputed_sha(spark):
         "repo", "path", "commit", "lang",
         F.sha2(F.col("content"), 256).alias("sha256"),
     )
-    out_slim = assign_doc_ids(slim).select(
+    out_slim = assign_doc_ids(slim, trust_sha256=True).select(
         "doc_id", "repo", "path", "commit", "sha256"
     )
     assert "content" not in out_slim.columns  # content never re-enters
     a = sorted(tuple(r) for r in out_full.collect())
     b = sorted(tuple(r) for r in out_slim.collect())
     assert a == b
+
+
+def test_assign_doc_ids_recomputes_untrusted_sha(spark):
+    """A corpus carrying its own ``sha256`` column is not trusted by
+    default: the output holds sha2(content)."""
+    from search_engine_spark.sources.corpus import assign_doc_ids
+
+    rows = synth_corpus(n_docs=20, seed=3)
+    bogus = spark.createDataFrame(rows).withColumn("sha256", F.lit("bogus"))
+    out = assign_doc_ids(bogus).select("path", "sha256").collect()
+    want = {
+        r["path"]: hashlib.sha256(r["content"].encode()).hexdigest()
+        for r in rows
+    }
+    assert len(out) == len(rows)
+    assert {r.path: r.sha256 for r in out} == want
+
+
+def test_build_rejects_duplicate_corpus_keys(spark, tmp_path):
+    """Two rows sharing (repo, path, commit) would fan out k x k in the
+    batch join (4 docs rows, num_docs 6); the build refuses them with the
+    duplicate count, and leaves no docs table behind as a checkpoint."""
+    import os
+
+    from search_engine_spark.build.builder import DuplicateKeyError
+
+    rows = [
+        ("r", "a.py", "c1", "python", "alpha beta"),
+        ("r", "a.py", "c1", "python", "gamma delta"),
+        ("r", "b.py", "c1", "python", "beta gamma"),
+        ("s", "a.py", "c2", "python", "alpha delta"),
+    ]
+    corpus = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+        "content string"
+    )
+    builder = IndexBuilder(spark, str(tmp_path / "idx"), CFG)
+    with pytest.raises(DuplicateKeyError, match=r"\b1 row"):
+        builder.build_all(corpus)
+    assert not os.path.isdir(builder.store.docs_path)
+
+
+def test_build_hashes_configured_body_col(spark, tmp_path):
+    """The docs table's sha256 is the hash of ``body_col``, so an index
+    built from a non-default body column passes verify_corpus."""
+    rows = synth_corpus(n_docs=40, seed=5)
+    corpus = spark.createDataFrame(rows).withColumnRenamed("content", "text")
+    builder = IndexBuilder(spark, str(tmp_path / "idx"), CFG, body_col="text")
+    stats = builder.build_all(corpus)
+    assert stats["num_docs"] == len(rows)
+    assert builder.verify_corpus(corpus) == {
+        "rows": len(rows), "missing": 0, "sha_mismatch": 0,
+    }

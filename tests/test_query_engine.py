@@ -229,16 +229,20 @@ def _broadcast_subtrees(plan_str: str) -> list[str]:
     return subs
 
 
-def test_doc_info_never_broadcasts_docs_table(setup, spark):
+def test_doc_info_never_broadcasts_docs_table(setup, spark, monkeypatch):
     """The docs table is corpus-row-count sized: any BroadcastExchange
     subtree that scans it must be the LeftSemi-pruned hit set, never the
     raw table (a driver OOM at 100x scale).
 
-    Without a corpus, the pruning semi-join is visible in the output
-    plan; with a corpus, docs_hit is pinned by a lazy localCheckpoint
-    (so the docs scan runs exactly once) and the output plan must
-    broadcast only checkpointed-RDD rows — never a raw docs or corpus
-    scan."""
+    This is the plan with_doc_info runs for hit sets over its driver-side
+    guard, so the guard is set to 0 here.  Without a corpus, the pruning
+    semi-join is visible in the output plan; with a corpus, docs_hit is
+    pinned by a lazy localCheckpoint (so the docs scan runs exactly once)
+    and the output plan must broadcast only checkpointed-RDD rows — never
+    a raw docs or corpus scan."""
+    import search_engine_spark.query.engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "_MAX_DRIVER_IDS", 0)
     engine, _oracle = setup
     rows = synth_corpus(n_docs=150, seed=7)
     corpus = spark.createDataFrame(rows)
@@ -268,6 +272,107 @@ def test_doc_info_never_broadcasts_docs_table(setup, spark):
     info = out.collect()
     assert len(info) > 0 and all(r.path is not None for r in info)
     assert all(r.snippet is not None for r in info)
+
+
+def test_doc_info_pushdown_matches_distributed_path(
+    setup, spark, monkeypatch
+):
+    """with_doc_info's driver-side pushdown path and its over-guard
+    distributed plan return identical rows and columns, with and without
+    corpus snippets, for a multi-qid batch whose queries ask different k;
+    repeated calls answered from the engine's doc-info caches agree."""
+    import search_engine_spark.query.engine as engine_mod
+
+    engine, _oracle = setup
+    corpus = spark.createDataFrame(synth_corpus(n_docs=150, seed=7))
+    ks = [3, 10, 5, 1, 7, 10]
+    plans = [
+        engine.compile(q, m, qid=i, num_return=k)
+        for i, ((q, m), k) in enumerate(zip(QUERIES, ks))
+    ]
+    for snippets in (None, corpus):
+        fast = engine.with_doc_info(engine.execute(plans), snippets)
+        with monkeypatch.context() as m:
+            m.setattr(engine_mod, "_MAX_DRIVER_IDS", 0)
+            slow = engine.with_doc_info(engine.execute(plans), snippets)
+        assert fast.schema == slow.schema
+        got = fast.collect()
+        assert got == slow.collect()
+        per_qid = {q: sum(r.qid == q for r in got) for q in range(len(ks))}
+        assert len(set(per_qid.values())) > 1  # the k's really differ
+        assert all(r.path is not None for r in got)
+        if snippets is not None:
+            assert all(r.snippet is not None for r in got)
+        again = engine.with_doc_info(engine.execute(plans), snippets)
+        assert again.collect() == got
+
+
+def test_query_path_job_counts(setup, spark):
+    """Upper bounds on Spark jobs per call of the interactive path (AQE
+    splits an action into a varying handful of jobs, so these are
+    ceilings, not exact counts)."""
+    import itertools
+
+    from search_engine_spark.serve import SearchService
+
+    engine, _oracle = setup
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def jobs_for(fn):
+        group = f"query-path-{next(groups)}"
+        sc.setJobGroup(group, "query path job-count assertion")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # a fresh engine, warmed by one query: the doclens side is cached
+    eng = SearchEngine(spark, str(engine.store.dir), CFG)
+    eng.with_doc_info(eng.search("zqmerge", SearchMode.AND)).collect()
+
+    _plan, n_compile = jobs_for(lambda: eng.compile("codec_2", SearchMode.OR))
+    assert n_compile <= 1
+    rows, n_repl = jobs_for(  # zqshard is unseen: compile pays its job
+        lambda: eng.with_doc_info(
+            eng.search("zqmerge zqshard", SearchMode.OR)
+        ).collect()
+    )
+    assert rows and n_repl <= 4
+    out = eng.with_doc_info(eng.search("zqmerge zqshard", SearchMode.AND))
+    _rows, n_collect = jobs_for(out.collect)
+    assert n_collect == 0
+
+    # serve: the batcher's worker threads carry no job group, so count
+    # the ungrouped jobs submitted during one cache miss
+    service = SearchService(spark, str(engine.store.dir), CFG)
+    service.search({"q": "zqmerge", "mode": "AND"})
+
+    def ungrouped():
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = max(ungrouped(), default=-1)
+    body = service.search({"q": "zqmerge zqshard", "mode": "OR"})
+    n_miss = sum(j > before for j in ungrouped())
+    assert body["num_results"] > 0 and n_miss <= 4
+
+
+def test_term_stats_lookup_is_thread_safe_on_first_use(setup):
+    """Concurrent first lookups on a fresh store (a serving process's
+    first request burst) all succeed and agree with serial ones."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from search_engine_spark.sources.index_store import IndexStore
+
+    engine, _oracle = setup
+    terms = [["zqmerge"], ["zqshard"], ["codec_2", "zqmerge"], ["parse_1"]]
+    for _trial in range(3):
+        store = IndexStore(engine.spark, str(engine.store.dir), engine.config)
+        with ThreadPoolExecutor(len(terms)) as pool:
+            got = list(pool.map(store.term_stats_for, terms))
+        assert got == [engine.store.term_stats_for(t) for t in terms]
+        assert got[0]["zqmerge"] > 0
 
 
 def test_postings_scan_is_pruned(setup):
