@@ -1,6 +1,6 @@
 """40.96M-doc anchor: sf0.1 documents x8192, pipelined lineage batches.
 
-One notch up from bench_runs/scale20m.py (same protocol): 40 bounded
+One notch up from the 20.48M-doc run (r4_scale20m.json, same protocol): 40 bounded
 lineage batches (~1.05M docs each) submitted 3-wide under the build-sized
 session (spark.task.cpus=2), then the headline ranked-query set under a
 FRESH query-sized session (task.cpus=1 + AQE, the r4 finding recorded in
@@ -95,7 +95,7 @@ if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
     )
     # materialize as the production input shape: parquet sorted by
     # (repo, path) so the builder's per-batch key-range filter prunes
-    # files (scale20m.py lesson: unmaterialized crossJoin = 2.7x slower)
+    # files (20.48M-run lesson: unmaterialized crossJoin = 2.7x slower)
     t = time.time()
     corpus.orderBy("repo", "path").write.mode("overwrite").parquet(corpus_path)
     print("corpus materialize", round(time.time() - t, 1), "s", flush=True)

@@ -17,7 +17,7 @@ doc i is zipf_cdf^-1(u) where u = splitmix64(i * 4096 + j) scaled to
 [0,1) — no RNG state, any partitioning yields identical docs.  Tokens
 are `t%05d` so the contract "simple" tokenizer ([a-z0-9_]+) keeps them
 whole.  Written sorted by (repo, path) so the builder's per-batch range
-filter prunes files (bench_runs/scale20m.py lesson).
+filter prunes files (a lesson of the 20.48M-doc run, r4_scale20m.json).
 
 Burstiness: iid Zipf draws alone still give near-uniform block maxima
 (tf is ~Bernoulli per doc, so every 128-doc block's max_tf is 1-2 and

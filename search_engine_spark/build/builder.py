@@ -15,12 +15,18 @@ bucket → write doclens/batch=K → commit lineage row``
 * Batch boundaries align with chunk boundaries, so a batch never rewrites
   another batch's (term, chunk) rows — resume is append-only.  A batch is
   visible only after its lineage row commits (Iceberg-snapshot-style
-  gating, see ``sources/index_store.py``).
+  gating, see ``sources/index_store.py``).  The commit is a driver-side
+  file rename, not a Spark job: the lineage row is one parquet file
+  written under a hidden name and renamed into ``lineage/``, so
+  concurrent batches need no lock (their row files have distinct names).
 * ``finalize()`` (re)computes the collection stats + term_stats tables
   from committed data; it is idempotent and safe to re-run after resume.
+  Its lineage sums and the stats row are driver-side reads and writes.
 
-Build metrics (docs/sec, postings/sec, bytes compressed) are recorded per
-batch in the lineage table.
+Bookkeeping never pays a Spark job: per-batch metrics (docs, postings,
+bytes, doc-length sums and maxes) ride the postings write as observed
+aggregates and land in the lineage row, which a streaming increment's
+``finalize_incremental`` folds into the stats without a scan.
 """
 
 from __future__ import annotations
@@ -28,8 +34,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import threading
 import time
+import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -44,7 +50,32 @@ from search_engine_spark.sources.index_store import (
     IndexStore,
     PARTIALS_SCHEMA,
     POSTINGS_SCHEMA,
+    TERM_BLOOM_OPTIONS,
 )
+
+# the collection-stats ingredients a batch's lineage row carries
+DOC_LEN_FIELDS = ("sum_doc_len", "sum_title_len", "max_doc_len", "max_title_len")
+
+
+def _postings_metrics() -> list:
+    """Lineage metrics of a postings write, observed on it (the
+    reserved-term "" rows' df is the per-chunk doc count)."""
+    is_post = F.col("term") != ""
+    return [
+        F.count(F.when(is_post, 1)).alias("rows"),
+        F.sum(F.when(is_post, F.col("df"))).alias("postings"),
+        F.sum(
+            F.when(
+                is_post,
+                F.length("doc_ids")
+                + F.length("tfs_body")
+                + F.length("tfs_title")
+                + F.length("pos_body")
+                + F.length("pos_title"),
+            )
+        ).alias("bytes"),
+        F.sum(F.when(~is_post, F.col("df"))).alias("n_docs"),
+    ]
 
 
 class DuplicateKeyError(ValueError):
@@ -65,10 +96,6 @@ class IndexBuilder:
         self.store = IndexStore(spark, index_dir, self.config)
         self.title_col = title_col
         self.body_col = body_col
-        # serializes the shared lineage-table append when batches run as
-        # concurrent jobs (see build_postings): parallel appends to one
-        # parquet dir can collide on the committer's _temporary staging
-        self._lineage_lock = threading.Lock()
 
     # ----- phase A: docs table (doc ids + sha256 + lengths) -----
 
@@ -114,8 +141,9 @@ class IndexBuilder:
                 f"repeats an earlier row's; keys must be unique"
             )
         # id-assignment integrity: duplicated/dropped ids would silently
-        # corrupt every downstream posting (see assign_doc_ids docstring)
-        n_out = self.store.read_docs().count()
+        # corrupt every downstream posting (see assign_doc_ids docstring);
+        # the footers of the unfiltered table hold the exact row count
+        n_out = self.store.parquet_rows(self.store.docs_path)
         if n_out != n_in:
             raise RuntimeError(
                 f"doc-id assignment corrupted: {n_in} corpus rows -> "
@@ -190,13 +218,10 @@ class IndexBuilder:
         # slots a single batch's shuffle leaves idle (measured at 5.12M
         # docs: 5 serial default-size batches reached 22.8k docs/s vs
         # 63.9k for one giant batch; concurrency recovers the gap WITHOUT
-        # giving up per-batch commit/resume granularity).  The shared
-        # lineage table is the one commit point — its tiny append is
-        # serialized in _run_batch (self._lineage_lock) because two
-        # simultaneous appends to one parquet dir can collide on the
-        # committer's _temporary staging.  Failure semantics are
-        # unchanged: an uncommitted batch is simply re-run on resume,
-        # whatever other batches committed around it.
+        # giving up per-batch commit/resume granularity).  Each batch
+        # commits its own lineage row file, so commits never collide.
+        # Failure semantics are unchanged: an uncommitted batch is simply
+        # re-run on resume, whatever other batches committed around it.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(conc) as pool:
@@ -250,6 +275,26 @@ class IndexBuilder:
         partials = batch_docs.mapInPandas(
             make_partials_mapper(cfg.tokenizer, cfg.chunk_docs), PARTIALS_SCHEMA
         )
+        # doc-length sums and maxes for the stats fold: the reserved-term
+        # "" partial rows carry one length per doc (each doc in exactly one
+        # of them), still as arrays before the merge encodes them
+        is_len = F.col("term") == ""
+        len_obs = Observation(f"batch_{batch_id}_doc_lens")
+
+        def len_sum(col: str):
+            return F.sum(F.when(is_len, F.aggregate(
+                col, F.lit(0).cast("long"), lambda acc, x: acc + x
+            )))
+
+        partials = partials.observe(
+            len_obs,
+            len_sum("doc_lens").alias("sum_doc_len"),
+            len_sum("title_lens").alias("sum_title_len"),
+            F.max(F.when(is_len, F.array_max("doc_lens"))).alias("max_doc_len"),
+            F.max(F.when(is_len, F.array_max("title_lens"))).alias(
+                "max_title_len"
+            ),
+        )
         # merge = shuffle on (term, chunk_id) + in-partition sorted group
         # stream (see make_merge_stream_fn; the chunk key is the doc-range
         # salt bounding any one task's share of a skewed term)
@@ -267,76 +312,78 @@ class IndexBuilder:
         # batch metrics ride the write job as observed aggregates — a
         # separate metrics pass would re-read the whole batch output
         # (O(batch) scan per batch: the Amdahl term at streaming scale)
-        is_post = F.col("term") != ""
         obs = Observation(f"batch_{batch_id}_metrics")
         (
-            postings.observe(
-                obs,
-                F.count(F.when(is_post, 1)).alias("rows"),
-                F.sum(F.when(is_post, F.col("df"))).alias("postings"),
-                F.sum(
-                    F.when(
-                        is_post,
-                        F.length("doc_ids")
-                        + F.length("tfs_body")
-                        + F.length("tfs_title")
-                        + F.length("pos_body")
-                        + F.length("pos_title"),
-                    )
-                ).alias("bytes"),
-                F.sum(F.when(~is_post, F.col("df"))).alias("n_docs"),
-            )
+            postings.observe(obs, *_postings_metrics())
             .repartition("bucket")
             .sortWithinPartitions("term", "chunk_id")
             .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#term", "true")
+            .options(**TERM_BLOOM_OPTIONS)
             .partitionBy("bucket")
             .parquet(self.store.postings_batch_path(batch_id))
         )
-        agg_obs = obs.get
 
         # doclens for this batch: copy the reserved-term "" rows (one
         # bucket, bloom-pruned) written by the posting merge into the
         # doclens layout
-        written = self.spark.read.option(
-            "basePath", str(self.store.dir / "postings")
-        ).parquet(self.store.postings_batch_path(batch_id))
-        doclens = written.where(F.col("term") == "").select(
+        self._doclens_of(self.store.read_postings([batch_id])).write.mode(
+            "overwrite"
+        ).parquet(self.store.doclens_batch_path(batch_id))
+
+        # batch metrics came from the observations on the postings write
+        # (the reserved "" group's df IS the per-chunk doc count) — no
+        # rescan of the written output
+        agg = obs.get
+        lens = len_obs.get
+        metric = {
+            "batch_id": batch_id,
+            "first_chunk": first_chunk,
+            "last_chunk": last_chunk,
+            "n_docs": int(agg["n_docs"] or 0),
+            "n_postings": int(agg["postings"] or 0),
+            "n_rows_out": int(agg["rows"]),
+            "bytes_postings": int(agg["bytes"] or 0),
+            "wall_sec": time.time() - t0,
+            "input_fingerprint": f"doc_id:[{lo},{hi})",
+            "engine_version": "0.1.0",
+            **{f: int(lens[f] or 0) for f in DOC_LEN_FIELDS},
+        }
+        # lineage commit LAST — makes the batch visible
+        self.store.append_lineage(metric)
+        return metric
+
+    @staticmethod
+    def _doclens_of(postings: DataFrame) -> DataFrame:
+        """The doclens layout of a postings frame's reserved-term rows."""
+        return postings.where(F.col("term") == "").select(
             "chunk_id",
             F.col("df").cast("int").alias("n_docs"),
             "doc_ids",
             F.col("tfs_body").alias("doc_lens"),
             F.col("tfs_title").alias("title_lens"),
         )
-        doclens.write.mode("overwrite").parquet(
-            self.store.doclens_batch_path(batch_id)
+
+    @staticmethod
+    def _term_stats_of(postings: DataFrame) -> DataFrame:
+        """(bucket, term) -> df sum and chunk count of a postings frame."""
+        return (
+            postings.where(F.col("term") != "")
+            .groupBy("bucket", "term")
+            .agg(
+                F.sum("df").cast("long").alias("df"),
+                F.count("*").alias("n_chunks"),
+            )
         )
 
-        # batch metrics came from the observation on the postings write
-        # (the reserved "" group's df IS the per-chunk doc count) — no
-        # rescan of the written output
-        agg = agg_obs
-        n_docs = agg["n_docs"]
-        wall = time.time() - t0
-        metric = {
-            "batch_id": batch_id,
-            "first_chunk": first_chunk,
-            "last_chunk": last_chunk,
-            "n_docs": int(n_docs or 0),
-            "n_postings": int(agg["postings"] or 0),
-            "n_rows_out": int(agg["rows"]),
-            "bytes_postings": int(agg["bytes"] or 0),
-            "wall_sec": wall,
-            "input_fingerprint": f"doc_id:[{lo},{hi})",
-            "engine_version": "0.1.0",
-        }
-        # lineage commit LAST — makes the batch visible (one writer at a
-        # time: concurrent batch pipelines share this table)
-        with self._lineage_lock:
-            self.spark.createDataFrame([metric]).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.store.lineage_path)
-        return metric
+    def _write_term_stats(self, term_stats: DataFrame, path: str) -> None:
+        (
+            term_stats.repartition("bucket")
+            .sortWithinPartitions("term")
+            .write.mode("overwrite")
+            .options(**TERM_BLOOM_OPTIONS)
+            .partitionBy("bucket")
+            .parquet(path)
+        )
 
     # ----- finalize: collection stats + term stats -----
 
@@ -372,39 +419,23 @@ class IndexBuilder:
         # total postings from the lineage metrics (committed batches only
         # — replaced pre-compaction rows would double-count) — avoids a
         # second full postings scan
-        lineage = self.store.read_lineage_committed()
-        lin = lineage.agg(
-            F.sum("n_postings").alias("n_postings"),
-            F.sum("n_docs").alias("n_docs"),
-        ).head()
-        total_postings = lin.n_postings or 0
-        postings = self.store.read_postings()
+        lineage = self.store.committed_lineage(["n_postings", "n_docs"])
         stats = {
             **stats_row,
-            "total_postings": int(total_postings),
+            "total_postings": sum(int(r["n_postings"] or 0) for r in lineage),
             # allocated-id coverage stamp: the committed-lineage n_docs sum
             # (== docs.count() across deletes AND purges — n_docs means ids
             # ALLOCATED) these stats reflect.  finalize_incremental
             # cross-checks it so a crash that committed a batch's lineage
             # but lost its stats fold can never silently compound — it
             # detects the stale base and falls back to this full pass.
-            "ids_covered": int(lin.n_docs or 0),
+            "ids_covered": sum(int(r["n_docs"] or 0) for r in lineage),
         }
-        self.spark.createDataFrame([stats]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self.store.stats_path)
+        self.store.write_stats(stats)
 
-        term_stats = postings.where(F.col("term") != "").groupBy("bucket", "term").agg(
-            F.sum("df").cast("long").alias("df"),
-            F.count("*").alias("n_chunks"),
-        )
-        (
-            term_stats.repartition("bucket")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#term", "true")
-            .partitionBy("bucket")
-            .parquet(self.store.term_stats_path)
+        self._write_term_stats(
+            self._term_stats_of(self.store.read_postings()),
+            self.store.term_stats_path,
         )
         return stats
 
@@ -416,8 +447,10 @@ class IndexBuilder:
         full postings table per advance() would dwarf the increment.
 
         * collection stats: the persisted exact int sums (``sum_doc_len``
-          etc.) are advanced by the increment's aggregates; averages stay
-          bit-equal to a full recompute (one int-sum / count division).
+          etc.) are advanced by the sums and maxes the batch's lineage row
+          carries (observed on its postings write) — no Spark job;
+          averages stay bit-equal to a full recompute (one int-sum / count
+          division).
         * term_stats: the increment batch's (bucket, term) contributions
           are merged with the existing table by a union + groupBy-sum
           (vocabulary-sized shuffle, not postings-sized) written to a
@@ -427,7 +460,8 @@ class IndexBuilder:
         update — a crash mid-swap fails engine opens loudly and
         :meth:`repair_pending_finalize` rebuilds via the full
         :meth:`finalize`.  Falls back to the full path when the stats
-        file predates the persisted sums, and — via the ``ids_covered``
+        file predates the persisted sums or the batch's lineage row
+        predates the doc-length fields, and — via the ``ids_covered``
         allocated-id stamp — when the stats base is STALE (a prior crash
         landed between a batch's lineage append and its stats fold, a
         window no marker covers), so a lost fold heals on the next
@@ -437,6 +471,14 @@ class IndexBuilder:
         old = self.store.read_stats()
         if old.get("sum_doc_len") is None:
             return self.finalize()  # pre-r4 stats file: one full pass
+        committed_rows = self.store.committed_lineage(
+            ["n_postings", "n_docs", *DOC_LEN_FIELDS]
+        )
+        inc = next(
+            (r for r in committed_rows if r["batch_id"] == batch_id), None
+        )
+        if inc is None or any(inc[f] is None for f in DOC_LEN_FIELDS):
+            return self.finalize()  # lineage row without doc-length sums
 
         # --- stale-base cross-check (closes the r4 ADVICE crash window):
         # a crash between _run_batch's lineage append (batch visible) and
@@ -449,26 +491,13 @@ class IndexBuilder:
         # sum MINUS this batch's ids, some prior fold was lost — rebuild
         # via the full finalize() (marker-bracketed so a crash inside the
         # rebuild is still detected by engine opens / repaired).
-        lineage = self.store.lineage_rows_meta(
-            ["batch_id", "replaces", "n_postings", "n_docs"]
-        )
-        replaced: set[int] = set()
-        for r in lineage:
-            if r["replaces"]:
-                replaced.update(r["replaces"])
-        committed_rows = [r for r in lineage if r["batch_id"] not in replaced]
         total_postings = sum(
             int(r["n_postings"] or 0) for r in committed_rows
         )
         ids_total = sum(int(r["n_docs"] or 0) for r in committed_rows)
-        batch_ids = sum(
-            int(r["n_docs"] or 0)
-            for r in committed_rows
-            if r["batch_id"] == batch_id
-        )
         if (
             old.get("ids_covered") is None  # pre-r5 stats file
-            or int(old["ids_covered"]) != ids_total - batch_ids
+            or int(old["ids_covered"]) != ids_total - int(inc["n_docs"])
         ):
             with open(self.store.pending_finalize_path, "w") as fh:
                 json.dump(
@@ -486,86 +515,37 @@ class IndexBuilder:
         with open(self.store.pending_finalize_path, "w") as fh:
             json.dump({"batch_id": batch_id, "incremental": True}, fh)
 
-        def _fold_stats() -> dict:
-            raw = (
-                self.store.read_doc_lens([batch_id])
-                .agg(
-                    F.count("*").alias("num_docs"),
-                    F.sum("doc_len").alias("sum_doc_len"),
-                    F.sum("title_len").alias("sum_title_len"),
-                    F.max("doc_len").alias("max_doc_len"),
-                    F.max("title_len").alias("max_title_len"),
-                )
-                .head()
-            )
-            num_docs = int(old["num_docs"]) + int(raw.num_docs)
-            sum_dl = int(old["sum_doc_len"]) + int(raw.sum_doc_len or 0)
-            sum_tl = int(old["sum_title_len"]) + int(raw.sum_title_len or 0)
-            stats = {
-                "num_docs": num_docs,
-                "avg_doc_len": sum_dl / num_docs if num_docs else 0.0,
-                "avg_title_len": sum_tl / num_docs if num_docs else 0.0,
-                "max_doc_len": max(
-                    int(old["max_doc_len"]), int(raw.max_doc_len or 0)
-                ),
-                "max_title_len": max(
-                    int(old["max_title_len"]), int(raw.max_title_len or 0)
-                ),
-                "sum_doc_len": sum_dl,
-                "sum_title_len": sum_tl,
-                "total_postings": int(total_postings),
-                "ids_covered": int(ids_total),
-            }
-            self.spark.createDataFrame([stats]).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(self.store.stats_path)
-            return stats
-
         staging = self.store.term_stats_path + ".staging"
         retired = self.store.term_stats_path + ".retired"
-
-        def _merge_term_stats() -> None:
-            inc = (
-                self.spark.read.parquet(
-                    self.store.postings_batch_path(batch_id)
-                )
-                .where(F.col("term") != "")
-                .groupBy("bucket", "term")
-                .agg(
-                    F.sum("df").cast("long").alias("df"),
-                    F.count("*").alias("n_chunks"),
-                )
+        merged = (
+            self.store.read_term_stats()
+            .unionByName(self._term_stats_of(self.store.read_postings([batch_id])))
+            .groupBy("bucket", "term")
+            .agg(
+                F.sum("df").cast("long").alias("df"),
+                F.sum("n_chunks").alias("n_chunks"),
             )
-            merged = (
-                self.store.read_term_stats()
-                .unionByName(inc)
-                .groupBy("bucket", "term")
-                .agg(
-                    F.sum("df").cast("long").alias("df"),
-                    F.sum("n_chunks").alias("n_chunks"),
-                )
-            )
-            shutil.rmtree(staging, ignore_errors=True)
-            (
-                merged.repartition("bucket")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .option("parquet.bloom.filter.enabled#term", "true")
-                .partitionBy("bucket")
-                .parquet(staging)
-            )
+        )
+        shutil.rmtree(staging, ignore_errors=True)
+        self._write_term_stats(merged, staging)
 
-        # the two halves write disjoint tables (stats vs term_stats
-        # staging) from disjoint inputs — run them as concurrent Spark
-        # jobs; both must succeed before the swap commits anything, and
-        # the pending marker covers a failure of either
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as pool:
-            f_stats = pool.submit(_fold_stats)
-            f_merge = pool.submit(_merge_term_stats)
-            stats = f_stats.result()
-            f_merge.result()
+        num_docs = int(old["num_docs"]) + int(inc["n_docs"])
+        sum_dl = int(old["sum_doc_len"]) + int(inc["sum_doc_len"])
+        sum_tl = int(old["sum_title_len"]) + int(inc["sum_title_len"])
+        stats = {
+            "num_docs": num_docs,
+            "avg_doc_len": sum_dl / num_docs if num_docs else 0.0,
+            "avg_title_len": sum_tl / num_docs if num_docs else 0.0,
+            "max_doc_len": max(int(old["max_doc_len"]), int(inc["max_doc_len"])),
+            "max_title_len": max(
+                int(old["max_title_len"]), int(inc["max_title_len"])
+            ),
+            "sum_doc_len": sum_dl,
+            "sum_title_len": sum_tl,
+            "total_postings": int(total_postings),
+            "ids_covered": int(ids_total),
+        }
+        self.store.write_stats(stats)
         shutil.rmtree(retired, ignore_errors=True)
         os.rename(self.store.term_stats_path, retired)
         os.rename(staging, self.store.term_stats_path)
@@ -585,19 +565,37 @@ class IndexBuilder:
         recomputes stats/term_stats (Lucene segment-merge / Iceberg
         delete-file semantics).  Doc ids are never reused: the docs table
         keeps the tombstoned rows so streaming appends keep assigning
-        fresh dense ids."""
+        fresh dense ids.
+
+        The id plan is evaluated once: one write into a hidden staging
+        dir counts its rows as it goes, and renaming the single written
+        file into ``tombstones/`` is the commit.  Nothing to delete
+        leaves no file behind."""
         if isinstance(doc_ids, DataFrame):
             df = doc_ids.select(F.col("doc_id").cast("long"))
         else:
             ids = [(int(i),) for i in doc_ids]
             df = self.spark.createDataFrame(ids, "doc_id long")
-        df = df.distinct()
-        n = df.count()
+        obs = Observation("tombstone_rows")
+        staging = str(self.store.dir / f".tombstones-{uuid.uuid4().hex}")
+        df.distinct().observe(obs, F.count("*").alias("n")).coalesce(
+            1
+        ).write.parquet(staging)
+        n = int(obs.get["n"])
         if n:
-            df.coalesce(1).write.mode("append").parquet(
-                self.store.tombstones_path
-            )
-        return {"deleted": int(n)}
+            os.makedirs(self.store.tombstones_path, exist_ok=True)
+            for name in os.listdir(staging):
+                if name.endswith(".parquet"):
+                    os.replace(
+                        os.path.join(staging, name),
+                        os.path.join(self.store.tombstones_path, name),
+                    )
+            # a Spark append would have done this: cached plans over the
+            # tombstones (an open engine's per-chunk deleted-id side, which
+            # compact()'s purge plan matches) must not keep the old listing
+            self.spark.catalog.refreshByPath(self.store.tombstones_path)
+        shutil.rmtree(staging)
+        return {"deleted": n}
 
     def delete_where(self, predicate) -> dict:
         """Tombstone every doc whose docs-table metadata row (repo, path,
@@ -669,16 +667,18 @@ class IndexBuilder:
         chunks containing a deleted doc go through the decode/re-encode
         kernel, every other chunk's rows are moved JVM-side untouched.
         Single writer assumed (like all builder mutations)."""
-        import time as _time
-
         from search_engine_spark.build.kernels import make_purge_fn
-        from search_engine_spark.sources.index_store import POSTINGS_SCHEMA
 
-        t0 = _time.time()
+        t0 = time.time()
         self.repair_pending_finalize()
-        committed = self.store.committed_batches()
+        lineage = self.store.committed_lineage(
+            ["first_chunk", "last_chunk", "n_docs", "n_postings",
+             "n_rows_out", "bytes_postings"]
+        )
+        committed = sorted(r["batch_id"] for r in lineage)
         tomb = self.store.read_tombstones()
-        if tomb is not None and tomb.isEmpty():
+        n_deleted = tomb.count() if tomb is not None else 0
+        if not n_deleted:
             tomb = None
         if len(committed) <= 1 and tomb is None:
             return {"compacted": False, "batches": committed}
@@ -688,10 +688,11 @@ class IndexBuilder:
         ]
         new_id = max(all_ids) + 1
 
+        def total(field: str) -> int:
+            return sum(int(r[field] or 0) for r in lineage)
+
         postings = self.store.read_postings(committed)
-        n_deleted = 0
         if tomb is not None:
-            n_deleted = tomb.count()
             by_chunk = (
                 tomb.select(
                     F.floor(F.col("doc_id") / self.config.chunk_docs)
@@ -728,21 +729,21 @@ class IndexBuilder:
         # intact) while splitting each bucket into ~128 MB files, sized
         # from the lineage byte sum the same way id assignment sizes its
         # sort partitions.
-        bytes_total = int(
-            self.store.read_lineage_committed()
-            .agg(F.sum("bytes_postings"))
-            .head()[0]
-            or 0
-        )
         n_out = max(
             self.spark.sparkContext.defaultParallelism,
-            -(-bytes_total // (128 << 20)),
+            -(-total("bytes_postings") // (128 << 20)),
         )
+        # purged sums differ from the replaced rows' — count them on the
+        # write (the same observed aggregates _run_batch takes), above the
+        # range exchange: its boundary-sampling job runs the plan below it
+        # once more and would count every row twice
+        written = Observation(f"compact_{new_id}_metrics")
         (
             postings.repartitionByRange(n_out, "bucket", "term", "chunk_id")
+            .observe(written, *_postings_metrics())
             .sortWithinPartitions("term", "chunk_id")
             .write.mode("overwrite")
-            .option("parquet.bloom.filter.enabled#term", "true")
+            .options(**TERM_BLOOM_OPTIONS)
             .partitionBy("bucket")
             .parquet(self.store.postings_batch_path(new_id))
         )
@@ -755,16 +756,7 @@ class IndexBuilder:
             # doclens must drop the purged docs too — re-derive from the
             # purged postings' reserved-term "" rows (same extraction as
             # ``_run_batch``), guaranteeing the two stay consistent
-            written = self.spark.read.option(
-                "basePath", str(self.store.dir / "postings")
-            ).parquet(self.store.postings_batch_path(new_id))
-            doclens = written.where(F.col("term") == "").select(
-                "chunk_id",
-                F.col("df").cast("int").alias("n_docs"),
-                "doc_ids",
-                F.col("tfs_body").alias("doc_lens"),
-                F.col("tfs_title").alias("title_lens"),
-            )
+            doclens = self._doclens_of(self.store.read_postings([new_id]))
         (
             doclens.repartitionByRange("chunk_id")
             .sortWithinPartitions("chunk_id")
@@ -772,54 +764,21 @@ class IndexBuilder:
             .parquet(self.store.doclens_batch_path(new_id))
         )
 
-        old = self.store.read_lineage_committed().agg(
-            F.min("first_chunk").alias("first_chunk"),
-            F.max("last_chunk").alias("last_chunk"),
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_postings").alias("n_postings"),
-            F.sum("n_rows_out").alias("n_rows_out"),
-            F.sum("bytes_postings").alias("bytes_postings"),
-        ).head()
-        if tomb is None:
-            counts = {
-                "n_docs": int(old.n_docs or 0),
-                "n_postings": int(old.n_postings or 0),
-                "n_rows_out": int(old.n_rows_out or 0),
-                "bytes_postings": int(old.bytes_postings or 0),
-            }
-        else:
-            # purged sums differ from the replaced rows' — recount from
-            # the written batch (metadata-cheap aggregate scan).  n_docs
-            # stays the replaced rows' sum: lineage n_docs means "doc ids
-            # COVERED/ALLOCATED by this batch" (ids are dense and never
-            # reused; the docs table keeps tombstoned rows), so the
-            # streaming torn-increment gate's identity
-            # docs.count() == sum(lineage n_docs) survives purges.
-            w = self.spark.read.parquet(self.store.postings_batch_path(new_id))
-            agg = w.agg(
-                F.sum(F.when(F.col("term") != "", F.col("df"))).alias("posts"),
-                F.sum(F.when(F.col("term") != "", 1)).alias("rows"),
-                F.sum(
-                    F.when(
-                        F.col("term") != "",
-                        F.length("doc_ids") + F.length("tfs_body")
-                        + F.length("tfs_title") + F.length("pos_body")
-                        + F.length("pos_title"),
-                    )
-                ).alias("bytes"),
-            ).head()
-            counts = {
-                "n_docs": int(old.n_docs or 0),
-                "n_postings": int(agg.posts or 0),
-                "n_rows_out": int(agg.rows or 0),
-                "bytes_postings": int(agg.bytes or 0),
-            }
+        agg = written.get
         metric = {
             "batch_id": new_id,
-            "first_chunk": int(old.first_chunk),
-            "last_chunk": int(old.last_chunk),
-            **counts,
-            "wall_sec": _time.time() - t0,
+            "first_chunk": min(int(r["first_chunk"]) for r in lineage),
+            "last_chunk": max(int(r["last_chunk"]) for r in lineage),
+            # n_docs stays the replaced rows' sum: lineage n_docs means
+            # "doc ids COVERED/ALLOCATED by this batch" (ids are dense and
+            # never reused; the docs table keeps tombstoned rows), so the
+            # streaming torn-increment gate's identity
+            # docs.count() == sum(lineage n_docs) survives purges
+            "n_docs": total("n_docs"),
+            "n_postings": int(agg["postings"] or 0),
+            "n_rows_out": int(agg["rows"]),
+            "bytes_postings": int(agg["bytes"] or 0),
+            "wall_sec": time.time() - t0,
             "input_fingerprint": f"compaction:{committed}|purged:{n_deleted}",
             "engine_version": "0.1.0",
             "replaces": [int(b) for b in committed],
@@ -836,9 +795,7 @@ class IndexBuilder:
                 json.dump({"batch_id": new_id}, fh)
         # append = the commit; a crash before this leaves invisible
         # orphan dirs (vacuum removes them), after it a consistent index
-        self.spark.createDataFrame([metric]).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.store.lineage_path)
+        self.store.append_lineage(metric)
         if tomb is not None:
             # physical purge changed the collection: recompute stats +
             # term_stats so scores match a fresh build over survivors.

@@ -46,8 +46,8 @@ class EngineConfig:
     # and resumed batches never rewrite earlier (term, chunk) rows.
     chunks_per_batch: int = 64
     # Independent lineage batches submitted as concurrent Spark jobs
-    # during bulk builds (each writes only its own batch dirs; the shared
-    # lineage append is lock-serialized).  >1 fills scheduler slots a
+    # during bulk builds (each writes only its own batch dirs and commits
+    # its own lineage row file).  >1 fills scheduler slots a
     # single batch's shuffle leaves idle without growing the commit unit.
     build_concurrency: int = 1
 

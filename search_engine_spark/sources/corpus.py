@@ -10,8 +10,9 @@ reference assigns them by input-row ordinal, ``ingestion.py:732``; we pin
 the order to ``(repo, path, commit)``).  A global ``row_number()`` window
 would be a single-task total sort — instead we use the partition-offset
 scheme: ``repartitionByRange`` on the sort key (deterministic sampling
-seed), count rows per range partition (one cheap agg job), broadcast the
-cumulative offsets, then a per-partition ``row_number`` window.  This also
+seed), count rows per range partition (one cheap agg job), apply the
+cumulative offsets as a literal array indexed by partition id, then a
+per-partition ``row_number`` window.  This also
 yields the *disjoint contiguous doc-range per partition* property the
 build relies on (partial posting lists concatenate back in sorted order —
 the distributed mirror of the reference's disjoint block ranges,
@@ -110,6 +111,20 @@ def assign_doc_ids(
     trust_sha256: bool = False,
     observation: Observation | None = None,
 ) -> DataFrame:
+    """See :func:`assign_doc_ids_counted`, which also returns the row
+    count."""
+    return assign_doc_ids_counted(
+        corpus, n_partitions, n_rows, trust_sha256, observation
+    )[0]
+
+
+def assign_doc_ids_counted(
+    corpus: DataFrame,
+    n_partitions: int | None = None,
+    n_rows: int | None = None,
+    trust_sha256: bool = False,
+    observation: Observation | None = None,
+) -> tuple[DataFrame, int]:
     """Adds dense ``doc_id`` (0..N-1 in (repo, path, commit) order) and
     ``sha256`` (per-row invariant vs the source corpus).
 
@@ -135,6 +150,12 @@ def assign_doc_ids(
     duplicating/dropping ids.  Callers must materialize the result (write
     it) before unpersisting; ``IndexBuilder.build_docs`` additionally
     asserts row-count conservation.
+
+    The per-partition offsets enter the plan as one literal array indexed
+    by ``_pid``: a broadcast join against a ``createDataFrame`` list would
+    plan a ``Scan ExistingRDD`` and pay a Python-worker job to ship a few
+    numbers.  Returns ``(frame, rows)``; ``rows`` is the total of the
+    counts pass, so a caller needs no separate count job.
     """
     spark = corpus.sparkSession
     if n_partitions is None:
@@ -148,20 +169,16 @@ def assign_doc_ids(
         "_pid", F.spark_partition_id()
     )
     ranged.persist()
-    counts = ranged.groupBy("_pid").count().collect()
-    offsets = {}
+    counts = {r._pid: r["count"] for r in ranged.groupBy("_pid").count().collect()}
+    offsets = []
     acc = 0
-    for row in sorted(counts, key=lambda r: r._pid):
-        offsets[row._pid] = acc
-        acc += row["count"]
-    offset_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
-    )
+    for pid in range(max(counts, default=-1) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
     w = Window.partitionBy("_pid").orderBy(*SORT_KEYS)
-    out = (
-        ranged.withColumn("_rn", F.row_number().over(w).cast("long") - 1)
-        .join(F.broadcast(offset_df), "_pid")
-        .withColumn("doc_id", F.col("_offset") + F.col("_rn"))
+    offset_of = F.array(*[F.lit(o).cast("long") for o in offsets or [0]])
+    out = ranged.withColumn(
+        "doc_id", offset_of[F.col("_pid")] + F.row_number().over(w) - 1
     )
     if not trust_sha256:
         out = out.withColumn("sha256", F.sha2(F.col("content"), 256))
@@ -173,4 +190,4 @@ def assign_doc_ids(
         out = out.withColumn("_dup", dup).observe(
             observation, F.count_if("_dup").alias("dup_keys")
         ).drop("_dup")
-    return out.drop("_pid", "_rn", "_offset")
+    return out.drop("_pid"), acc

@@ -20,22 +20,34 @@ manifest would give us):
     blk_min_dl(bin), blk_min_tl(bin)
 ``term_stats/bucket=B/``  term, df, n_chunks   (finalize artifact)
 ``stats/``       num_docs, avg_doc_len, avg_title_len, max_doc_len,
-                 max_title_len, total_postings
+                 max_title_len, sum_doc_len, sum_title_len,
+                 total_postings, ids_covered — one row, one file
 ``lineage/``     batch_id, first_chunk, last_chunk, n_docs, n_postings,
                  n_rows_out, bytes_postings, wall_sec, input_fingerprint,
-                 engine_version
+                 engine_version, sum_doc_len, sum_title_len, max_doc_len,
+                 max_title_len (+ ``replaces`` on compaction rows) — one
+                 file per row
+
+Bookkeeping is written driver-side with pyarrow, not by a Spark job: a
+lineage row or the stats row is one small parquet file, written under a
+hidden name and ``os.replace``-d into place.  The rename is the commit —
+readers (Spark and pyarrow both skip ``.``-prefixed names) see a row
+whole or not at all, and concurrent batches cannot collide because
+every row file has its own name.  Files an older Spark writer left
+(``part-*.parquet``) read the same way.
 
 All binary columns are delta+varbyte (``functions/codec.py``).  The
 reference keeps the same information in packed binary files + a marisa
-trie + pickles (``/root/reference/search_engine/ingestion.py:63-171``,
-``convert_index_to_marisa.py``); here the term dictionary is replaced by
-hash-bucket partition pruning + parquet min/max + bloom filters on
-``term``.
+trie + pickles (``ingestion.py:63-171``, ``convert_index_to_marisa.py``);
+here the term dictionary is replaced by hash-bucket partition pruning +
+parquet min/max + bloom filters on ``term``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,11 +106,28 @@ DOCS_SCHEMA = (
     "sha256 string"
 )
 TERM_STATS_SCHEMA = "term string, df long, n_chunks long, bucket int"
-STATS_SCHEMA = (
-    "num_docs long, avg_doc_len double, avg_title_len double, "
-    "max_doc_len long, max_title_len long, sum_doc_len long, "
-    "sum_title_len long, total_postings long, ids_covered long"
+# the stats row, in column order; a column an older file lacks reads None
+STATS_FIELDS = (
+    "num_docs", "avg_doc_len", "avg_title_len", "max_doc_len",
+    "max_title_len", "sum_doc_len", "sum_title_len", "total_postings",
+    "ids_covered",
 )
+STATS_FILE = "stats.parquet"
+
+# Bloom filter on ``term`` for every postings and term_stats write.  With
+# no NDV given, parquet-mr sizes each filter at parquet.bloom.filter.
+# max.bytes (1 MB) for every column chunk that is not dictionary-encoded
+# — term_stats' all-distinct terms fall back to PLAIN, so a few hundred
+# terms carried a 1 MB filter.  The adaptive writer keeps candidate
+# filters halving down from that maximum and writes the smallest one that
+# holds the chunk's distinct values at the default fpp (1 MB / 2^9 = 2 KB
+# floor).  The candidate count is a per-column key; the adaptive switch
+# is global.
+TERM_BLOOM_OPTIONS = {
+    "parquet.bloom.filter.enabled#term": "true",
+    "parquet.bloom.filter.adaptive.enabled": "true",
+    "parquet.bloom.filter.candidates.number#term": "10",
+}
 
 
 # layout fields baked into a built index — queries MUST use the builder's
@@ -178,6 +207,78 @@ class IndexStore:
         collection stats (BM25 would be silently wrong)."""
         return str(self.dir / "_finalize_pending")
 
+    # ----- driver-side bookkeeping commits -----
+    @staticmethod
+    def _write_hidden(directory: str, row: dict) -> str:
+        """Writes ``row`` as a one-row parquet file under a hidden name in
+        ``directory`` and returns its path; the caller's rename into a
+        visible name is the commit.  Local-filesystem layout, like
+        :meth:`lineage_rows_meta`."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        os.makedirs(directory, exist_ok=True)
+        tmp = os.path.join(directory, f".{uuid.uuid4().hex}.tmp")
+        pq.write_table(pa.Table.from_pylist([row]), tmp)
+        return tmp
+
+    def append_lineage(self, row: dict) -> None:
+        """Commits one lineage row: its own parquet file, visible only
+        once the rename lands (the batch's commit point)."""
+        tmp = self._write_hidden(self.lineage_path, row)
+        name = f"batch-{int(row['batch_id'])}-{uuid.uuid4().hex}.parquet"
+        os.replace(tmp, os.path.join(self.lineage_path, name))
+
+    def write_stats(self, row: dict) -> None:
+        """Replaces the stats row.  The new file is complete before any
+        old one goes; in the usual case the rename swaps it over the old
+        file atomically.  Files a Spark writer left (an index built before
+        stats were written driver-side) are removed just before the
+        rename — a missing-file window of one unlink + rename, where the
+        Spark overwrite this replaces had one whole write job."""
+        tmp = self._write_hidden(self.stats_path, row)
+        for name in os.listdir(self.stats_path):
+            path = os.path.join(self.stats_path, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            elif name != STATS_FILE and path != tmp:
+                os.remove(path)
+        os.replace(tmp, os.path.join(self.stats_path, STATS_FILE))
+
+    @staticmethod
+    def parquet_rows(paths) -> int:
+        """Exact row count from parquet FOOTERS (driver-side metadata
+        read, no Spark job) — for count gates on unfiltered parquet
+        dirs/files, where the footer sum is the same number a
+        ``.count()`` job would return.  O(#files) footer opens.
+
+        Every listed path must exist: a streaming advance hands this the
+        exact sink-log delta file list that ``spark.read.parquet(*delta)``
+        will scan, and silently skipping a vanished file would undercount
+        the gate and surface later as a confusing row-count mismatch
+        instead of the real missing-file error."""
+        import pyarrow.dataset as pads
+
+        if isinstance(paths, str):
+            paths = [paths]
+        locs = [p[7:] if p.startswith("file://") else p for p in paths]
+        missing = [p for p in locs if not os.path.exists(p)]
+        if missing:
+            raise FileNotFoundError(
+                "listed parquet path(s) do not exist: " + ", ".join(missing)
+            )
+        if not locs:
+            return 0
+        # pyarrow only accepts directories as a SINGLE path argument —
+        # split dirs from plain files and sum fragment footers
+        dirs = [p for p in locs if os.path.isdir(p)]
+        files = [p for p in locs if not os.path.isdir(p)]
+        total = 0
+        for src in dirs + ([files] if files else []):
+            d = pads.dataset(src, format="parquet")
+            total += sum(f.metadata.num_rows for f in d.get_fragments())
+        return total
+
     def read_tombstones(self) -> DataFrame | None:
         """Deleted doc ids (deduplicated), or None when no deletions are
         pending.  Tombstones are LOGICAL deletes: query kernels exclude
@@ -225,28 +326,26 @@ class IndexStore:
                 out.append(row)
         return out
 
-    def committed_batches(self) -> list[int]:
-        """Visible batches = all lineage rows minus any batch some row's
-        ``replaces`` list names (the compaction commit protocol: one
+    def committed_lineage(self, columns: list[str]) -> list[dict]:
+        """Lineage rows of visible batches = all rows minus any batch some
+        row's ``replaces`` list names (the compaction commit protocol: one
         appended row atomically supersedes the batches it rewrote —
-        Iceberg's snapshot semantics on the same append-only commit point
-        ``IndexBuilder._run_batch`` uses).  Driver-side metadata read —
-        no Spark job."""
-        rows = self.lineage_rows_meta(["batch_id", "replaces"])
+        Iceberg's snapshot semantics on the same commit point
+        ``IndexBuilder._run_batch`` uses).  Metric sums (n_docs,
+        n_postings) over these rows stay correct across compactions (a
+        compaction row carries the sums of the rows it replaced).
+        Driver-side metadata read — no Spark job."""
+        rows = self.lineage_rows_meta(
+            list(dict.fromkeys(["batch_id", "replaces", *columns]))
+        )
         replaced: set[int] = set()
         for r in rows:
             if r["replaces"]:
                 replaced.update(r["replaces"])
-        return sorted(
-            r["batch_id"] for r in rows if r["batch_id"] not in replaced
-        )
+        return [r for r in rows if r["batch_id"] not in replaced]
 
-    def read_lineage_committed(self) -> DataFrame:
-        """Lineage rows of visible batches only — metric sums (n_docs,
-        n_postings) over this frame stay correct across compactions
-        (a compaction row carries the sums of the rows it replaced)."""
-        committed = self.committed_batches()
-        return self.read_lineage().where(F.col("batch_id").isin(committed))
+    def committed_batches(self) -> list[int]:
+        return sorted(r["batch_id"] for r in self.committed_lineage([]))
 
     def read_postings(self, batches: list[int] | None = None) -> DataFrame:
         if batches is None:
@@ -306,10 +405,15 @@ class IndexStore:
         )
 
     def read_stats(self) -> dict:
-        """The stats row; a column an older stats file lacks reads None."""
-        return self.spark.read.schema(STATS_SCHEMA).parquet(
-            self.stats_path
-        ).head().asDict()
+        """The stats row, read driver-side; a column an older stats file
+        lacks reads None."""
+        import pyarrow.dataset as pads
+
+        for frag in pads.dataset(self.stats_path, format="parquet").get_fragments():
+            rows = frag.to_table().to_pylist()
+            if rows:
+                return {f: rows[0].get(f) for f in STATS_FIELDS}
+        raise FileNotFoundError(f"no stats row under {self.stats_path}")
 
     def read_term_stats(self) -> DataFrame:
         return self.spark.read.schema(TERM_STATS_SCHEMA).parquet(

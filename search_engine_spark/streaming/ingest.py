@@ -33,11 +33,21 @@ write) triggers one anti-join rescan that also repairs the state.
 ``compact_staging()`` retires fully consumed sink files.
 
 Each increment commits one lineage batch (variable chunk count — batch
-metric rows record the chunk range) and re-runs the idempotent
-``finalize()`` so stats/term_stats cover the new data.  Readers opened
-before an increment keep their committed-batch snapshot; re-open a
+metric rows record the chunk range) and folds it into stats/term_stats
+(``IndexBuilder.finalize_incremental``).  Readers opened before an
+increment keep their committed-batch snapshot; re-open a
 ``SearchEngine`` to see newly committed batches (same snapshot-isolation
 behavior as the batch builder's resume).
+
+Job budget: on small increments the Spark job count IS the cost, so each
+step of an advance is one action and every count gate reads parquet
+footers.  Id assignment's counts pass doubles as the rescan's increment
+count; the snapshot's key range is observed on its write; the lineage
+row and stats are driver-side file commits; the stats fold reads the
+doc-length sums the batch's lineage row carries; the upsert's tombstone
+write evaluates its plan once.  A chunk-aligned ``advance(upsert=True)``
+runs ~25 jobs on 4 cores (``tests/test_write_path.py`` pins a ceiling
+of 30).
 """
 
 from __future__ import annotations
@@ -46,12 +56,15 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from search_engine_spark.build.builder import IndexBuilder
 from search_engine_spark.config import EngineConfig
-from search_engine_spark.sources.corpus import SORT_KEYS, assign_doc_ids
+from search_engine_spark.sources.corpus import (
+    SORT_KEYS,
+    assign_doc_ids_counted,
+)
 
 
 class StreamingIndexer:
@@ -175,42 +188,6 @@ class StreamingIndexer:
 
     def _tail_dir(self, version: int) -> str:
         return os.path.join(self.staging_dir, "tail", f"v{version}")
-
-    @staticmethod
-    def _parquet_rows(paths) -> int:
-        """Exact row count from parquet FOOTERS (driver-side metadata
-        read, no Spark job) — the count gates in :meth:`advance` run
-        once per increment on unfiltered parquet dirs/files, where the
-        footer sum is the same number a ``.count()`` job would return.
-        O(#files) footer opens; at production increment sizes that is
-        milliseconds vs a full scheduler round-trip per gate.
-
-        Every listed path must exist: the fast path hands this the exact
-        sink-log delta file list that ``spark.read.parquet(*delta)`` will
-        scan, and silently skipping a vanished file would undercount the
-        gate and surface later as a confusing snapshot row-count
-        mismatch instead of the real missing-file error."""
-        import pyarrow.dataset as pads
-
-        if isinstance(paths, str):
-            paths = [paths]
-        locs = [p[7:] if p.startswith("file://") else p for p in paths]
-        missing = [p for p in locs if not os.path.exists(p)]
-        if missing:
-            raise FileNotFoundError(
-                "listed parquet path(s) do not exist: " + ", ".join(missing)
-            )
-        if not locs:
-            return 0
-        # pyarrow only accepts directories as a SINGLE path argument —
-        # split dirs from plain files and sum fragment footers
-        dirs = [p for p in locs if os.path.isdir(p)]
-        files = [p for p in locs if not os.path.isdir(p)]
-        total = 0
-        for src in dirs + ([files] if files else []):
-            d = pads.dataset(src, format="parquet")
-            total += sum(f.metadata.num_rows for f in d.get_fragments())
-        return total
 
     def _staging_marker_path(self) -> str:
         return os.path.join(self.staging_dir, "compacted_upto.json")
@@ -343,7 +320,7 @@ class StreamingIndexer:
 
         if os.path.isdir(store.docs_path):
             docs = store.read_docs()
-            n_existing = self._parquet_rows(store.docs_path)
+            n_existing = store.parquet_rows(store.docs_path)
             lineage_docs = self._lineage_doc_count()
             if n_existing != lineage_docs:
                 # torn previous increment: docs rows appended but the
@@ -388,7 +365,7 @@ class StreamingIndexer:
             }
             # fast path inputs are raw parquet (tail snapshot + delta
             # files): their footer sums ARE the increment count
-            n_new_meta = scan["tail_rows"] + self._parquet_rows(delta)
+            n_new_meta = scan["tail_rows"] + store.parquet_rows(delta)
         else:
             # recovery (state missing or stale): one full rescan, key
             # anti-join drops already-indexed docs, duplicates between a
@@ -400,14 +377,18 @@ class StreamingIndexer:
                     docs.select(*SORT_KEYS), list(SORT_KEYS), "left_anti"
                 )
             scan = {"mode": "rescan", "delta_files": -1}
-            n_new_meta = None  # the anti-join needs a real count job
+            n_new_meta = None  # counted by the id assignment's pass
 
+        # dense ids continue from n_existing, (repo,path,commit)-ordered
+        # within the increment (assign_doc_ids' partition-offset scheme);
+        # on a rescan its per-partition counts pass sizes the increment
+        assigned = None
         if new is None:
             n_new = 0
         elif n_new_meta is not None:
             n_new = n_new_meta
         else:
-            n_new = new.count()
+            assigned, n_new = assign_doc_ids_counted(new)
         if n_new > 0 and n_existing % cfg.chunk_docs != 0:
             # a prior advance(final=True) flushed a partial tail chunk;
             # indexing more would re-emit that (term, chunk) in a second
@@ -463,13 +444,12 @@ class StreamingIndexer:
         last_chunk = (n_index_to + cfg.chunk_docs - 1) // cfg.chunk_docs
         batch_id = (max_committed + 1) if committed else 0
 
-        # dense ids continue from n_existing, (repo,path,commit)-ordered
-        # within the increment (assign_doc_ids' partition-offset scheme).
         # The increment is SNAPSHOTTED to parquet before the docs-table
         # append: appending to docs/ invalidates its file-listing cache,
         # so any later re-evaluation of the anti-join lineage would see
         # the just-appended rows and silently empty the increment.
-        assigned = assign_doc_ids(new)
+        if assigned is None:
+            assigned, _ = assign_doc_ids_counted(new)
         incr = (
             assigned
             .where(F.col("doc_id") < n_take)
@@ -478,7 +458,13 @@ class StreamingIndexer:
         inc_path = os.path.join(
             self.staging_dir, "increments", f"batch={batch_id}"
         )
-        incr.write.mode("overwrite").parquet(inc_path)
+        # the key range _run_batch slices by rides the snapshot write
+        keys = Observation(f"increment_{batch_id}_keys")
+        incr.observe(
+            keys,
+            F.min(F.struct(*SORT_KEYS)).alias("lo"),
+            F.max(F.struct(*SORT_KEYS)).alias("hi"),
+        ).write.mode("overwrite").parquet(inc_path)
         # the sub-chunk remainder becomes the next increment's tail — also
         # snapshotted now, before docs/ mutates under the lineage
         tail_count = n_new - n_take
@@ -492,21 +478,16 @@ class StreamingIndexer:
             assigned.where(F.col("doc_id") >= n_take).select(
                 *corpus_cols
             ).write.mode("overwrite").parquet(self._tail_dir(tail_version))
-        snap = self.spark.read.parquet(inc_path)
-        # one aggregate job serves both the key-range _run_batch needs
-        # and the snapshot row-count gate (no separate .count())
-        kb = snap.agg(
-            F.min(F.struct(*SORT_KEYS)).alias("lo"),
-            F.max(F.struct(*SORT_KEYS)).alias("hi"),
-            F.count("*").alias("n"),
-        ).head()
-        if int(kb.n) != n_take:
+        # footer-metadata gate — no Spark job
+        if store.parquet_rows(inc_path) != n_take:
             raise RuntimeError("increment snapshot row-count mismatch")
+        kb = keys.get
+        snap = self.spark.read.schema(incr.schema).parquet(inc_path)
         snap.select(
             "doc_id", "repo", "path", "commit", "lang", "sha256"
         ).write.mode("append").parquet(store.docs_path)
         # footer-metadata gate — no Spark job
-        n_after = self._parquet_rows(store.docs_path)
+        n_after = store.parquet_rows(store.docs_path)
         if n_after != n_index_to:
             raise RuntimeError(
                 f"streaming docs append corrupted: expected {n_index_to} "
@@ -515,7 +496,7 @@ class StreamingIndexer:
         metric = self.builder._run_batch(
             snap.drop("doc_id", "sha256"),
             snap.select("doc_id", *SORT_KEYS),
-            (kb.lo, kb.hi, int(kb.n)),
+            (kb["lo"], kb["hi"], n_take),
             batch_id,
             first_chunk,
             last_chunk,
@@ -566,14 +547,5 @@ class StreamingIndexer:
         """Ids covered by committed lineage (driver-side metadata read,
         no Spark job).  Lineage ``n_docs`` means ids ALLOCATED, so the
         sum equals ``docs.count()`` across deletes and purges."""
-        store = self.builder.store
-        rows = store.lineage_rows_meta(["batch_id", "replaces", "n_docs"])
-        replaced: set[int] = set()
-        for r in rows:
-            if r["replaces"]:
-                replaced.update(r["replaces"])
-        return sum(
-            int(r["n_docs"] or 0)
-            for r in rows
-            if r["batch_id"] not in replaced
-        )
+        rows = self.builder.store.committed_lineage(["n_docs"])
+        return sum(int(r["n_docs"] or 0) for r in rows)

@@ -192,6 +192,26 @@ def test_postings_scan_pushdown(spark, tmp_path):
     assert "pos_body" not in plan.split("ReadSchema")[-1]
 
 
+def test_term_bloom_filters_are_right_sized(built):
+    """Every postings and term_stats file carries a bloom filter on
+    ``term`` sized to the file's distinct terms.  A filter written at the
+    parquet default maximum is 1 MB per file, whatever the term count."""
+    import glob
+    import os
+
+    _rows, builder, _stats = built
+    store = builder.store
+    files = [
+        f
+        for root in (str(store.dir / "postings"), store.term_stats_path)
+        for f in glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+    ]
+    assert any("term_stats" in f for f in files)
+    assert any("postings" in f for f in files)
+    too_big = {f: os.path.getsize(f) for f in files if os.path.getsize(f) >= 64 << 10}
+    assert not too_big
+
+
 def test_verify_corpus_sha_invariant(built, spark):
     rows, builder, _ = built
     corpus = spark.createDataFrame(rows)
@@ -329,7 +349,7 @@ def test_concurrent_batches_equal_serial(spark, tmp_path):
     batches as concurrent Spark jobs; the resulting index must be
     IDENTICAL to a serial build — same postings rows, same stats, same
     committed lineage coverage — because each batch writes only its own
-    batch dirs and the lineage append is lock-serialized."""
+    batch dirs and commits its own lineage row file."""
     rows = synth_corpus(n_docs=320, seed=11)
     corpus = spark.createDataFrame(rows)
     cfg = EngineConfig(

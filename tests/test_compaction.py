@@ -70,8 +70,8 @@ def test_compact_preserves_results_and_collapses_batches(built, spark):
     after_batches = builder.store.committed_batches()
     assert after_batches == [out["batch_id"]]
     assert _results(spark, index_dir) == before
-    lineage = builder.store.read_lineage_committed().head()
-    assert lineage.n_docs == 150
+    lineage = builder.store.committed_lineage(["n_docs"])
+    assert [r["n_docs"] for r in lineage] == [150]
     # finalize after compaction reproduces identical stats (total_postings
     # comes from committed lineage sums)
     builder.finalize()

@@ -12,6 +12,7 @@ from search_engine_spark.config import EngineConfig
 from search_engine_spark.oracle.refsem import RefSemIndex
 from search_engine_spark.plans.parser import SearchMode
 from search_engine_spark.query.engine import SearchEngine
+from search_engine_spark.sources.index_store import IndexStore
 from search_engine_spark.streaming import StreamingIndexer
 from search_engine_spark.testing.synth import corpus_to_tokens, synth_corpus
 
@@ -542,4 +543,4 @@ def test_parquet_rows_raises_on_missing_path(tmp_path):
     the real missing-file error, not surface later as a confusing
     'increment snapshot row-count mismatch' undercount."""
     with pytest.raises(FileNotFoundError, match="missing.parquet"):
-        StreamingIndexer._parquet_rows([str(tmp_path / "missing.parquet")])
+        IndexStore.parquet_rows([str(tmp_path / "missing.parquet")])
